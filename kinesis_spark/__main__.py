@@ -201,9 +201,8 @@ def main(argv: list[str] | None = None, client=None, stdin=None, stdout=None) ->
         # would never be checked while the pipe is idle
         raise _Stop()
 
-    signal.signal(signal.SIGINT, _sig)
-    signal.signal(signal.SIGTERM, _sig)
-
+    # restored on the way out: an in-process caller keeps its handlers
+    previous = {s: signal.signal(s, _sig) for s in (signal.SIGINT, signal.SIGTERM)}
     try:
         try:
             while True:
@@ -218,6 +217,9 @@ def main(argv: list[str] | None = None, client=None, stdin=None, stdout=None) ->
     except Exception as exc:
         print(f"error: {exc}", file=sys.stderr)
         return 1
+    finally:
+        for signo, handler in previous.items():
+            signal.signal(signo, handler)
     if dropped["n"]:
         print(
             f"warning: dropped {dropped['n']} buffers ({dropped['bytes']} bytes)",

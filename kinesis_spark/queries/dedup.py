@@ -112,22 +112,23 @@ def _ordered_pairs(members, pair_of=None):
     )
 
 
-def _band_key_expr():
-    """The exploded LSH band-key column — BAND_ROWS adjacent minhash
-    columns concatenated per band. ONE definition for every consumer
-    (here, pipelines.p1/p3, streaming/neardup): a BAND_ROWS or N_HASHES
-    change must re-band every member of the family in lockstep, or
-    their candidate sets silently diverge."""
-    return F.explode(
-        F.array(
-            *[
-                F.concat_ws(
-                    "|", *[f"mh{BAND_ROWS * b + r}" for r in range(BAND_ROWS)]
-                )
-                for b in range(N_HASHES // BAND_ROWS)
-            ]
-        )
+def _band_key_array():
+    """The LSH band-key array — BAND_ROWS adjacent minhash columns
+    concatenated per band. ONE definition for every consumer (here,
+    pipelines.p1/p3, streaming/neardup, streaming/intake): a BAND_ROWS
+    or N_HASHES change must re-band every member of the family in
+    lockstep, or their candidate sets silently diverge."""
+    return F.array(
+        *[
+            F.concat_ws("|", *[f"mh{BAND_ROWS * b + r}" for r in range(BAND_ROWS)])
+            for b in range(N_HASHES // BAND_ROWS)
+        ]
     )
+
+
+def _band_key_expr():
+    """The exploded LSH band-key column (one row per band)."""
+    return F.explode(_band_key_array())
 
 
 def _minhash_sigs(docs: DataFrame) -> DataFrame:

@@ -40,7 +40,12 @@ atomically together) uses bloom_dedup.py's staged-batch discipline:
   a partial attempt already mutated (re-deriving would, e.g., see the
   batch's own band keys and resolve itself empty — then the hash store
   could never be completed). The snapshot read is also the lineage
-  barrier against the read-your-own-writes trap.
+  barrier against the read-your-own-writes trap. The snapshot holds
+  the batch's columns plus ``__h`` (the content hash the hash store
+  grows by) and ``__bk`` (the doc's array of MinHash band keys, null
+  under 3 tokens), so the band-index append explodes stored keys
+  instead of signing the admitted docs again; a snapshot without
+  ``__bk`` (staged by an older version) gets its keys computed on redo.
 - The corpus append runs an anti-join guard against the touched
   partitions' doc_ids ONLY on the redo path — the steady-state batch
   never scans the corpus; a redo whose predecessor died after
@@ -63,13 +68,18 @@ window + the a.id < b.id band rule). Across batches it is first-come-
 first-admitted — the arrival order IS the tie-break, which is the only
 meaningful contract for an unbounded stream.
 
-Scale shape per FRESH batch: one narrow pass over the batch (row-local
-probes), a hash-store scan pruned to its single column with the
-batch-scale candidate set broadcast (never the store), a band-index
-equi-join, one batch-sized staging write/read, one manifest swap per
-touched store, and a rollup delta over rollup-sized rows. Nothing
-scales with the corpus except the two hash/key-sized index-relation
-scans; corpus-partition scans happen only on crash-redo."""
+Scale shape per FRESH batch: ONE scan of the batch and ONE MinHash
+signature per document that survives exact dedup, then three batch-side
+shuffles — the hash window (min id per content hash, which also
+partitions the anti-join against the hash store), the band window (the
+band-index join and the min id per band key share its partitioning;
+the payload rides only on each doc's first band row) and the doc window
+(any hit per doc). Add one batch-sized staging write/read, one manifest
+swap per touched store, and a rollup delta over rollup-sized rows.
+Nothing scales with the corpus except the two hash/key-sized index
+scans, and a missing index is an empty relation the optimizer prunes;
+the touched-partition collect and the corpus-partition scans happen
+only on crash-redo."""
 
 from __future__ import annotations
 
@@ -154,57 +164,81 @@ class PrepIntakeSink:
             self._intake_dir(), "staging", f"b-{self.run_token}-{batch_id}"
         )
 
-    def _existing(self, path: str, schema: str) -> DataFrame:
+    def _existing(self, path: str, col: str) -> DataFrame:
+        """The one string column ``col`` of the index at ``path``."""
         from pyspark.errors import AnalysisException
 
         from kinesis_spark.partitioned_store import is_missing_store
 
         try:
-            return self.spark.read.schema(schema).parquet(path)
+            return self.spark.read.schema(f"{col} string").parquet(path)
         except AnalysisException as exc:
             # missing path = empty index. ONLY that: any other failure
             # on a populated index must fail the batch (and let the
             # streaming query retry), not admit everything as fresh
             if not is_missing_store(exc):
                 raise
-            return self.spark.createDataFrame([], schema)
+            # an empty relation Catalyst prunes: the join against it
+            # folds away instead of scanning and shuffling nothing
+            return self.spark.range(0).select(F.lit(None).cast("string").alias(col))
 
     def _admit(self, batch: DataFrame) -> DataFrame:
-        """Steps 1-3: the admitted subset of ``batch`` (lazy — the
-        caller materializes it into the staging snapshot)."""
+        """Steps 1-3: the admitted subset of ``batch`` plus its content
+        hash ``__h`` and band-key array ``__bk`` (lazy — the caller
+        materializes it into the staging snapshot).
+
+        ``batch`` is referenced ONCE (a DataFrame consumed twice re-runs
+        its whole upstream, pipelines.p1): hash window → anti-join vs
+        the hash store → row-local band keys → one row per (doc, band)
+        with the payload on the doc's first row only → left join to the
+        band index → band window (min id) → doc window (any hit)."""
         from pyspark.sql.window import Window
 
-        from kinesis_spark.streaming.neardup import band_keys
+        from kinesis_spark.streaming.neardup import with_band_keys
 
-        did, txt = self.id_col, self.text_col
-        h = batch.withColumn("__h", F.sha2(txt, 256))
+        did = self.id_col
+        cols = [*batch.columns, "__h", "__bk"]
+        payload = [c for c in cols if c != did]
         wh = Window.partitionBy("__h").orderBy(did)
         firsts = (
-            h.withColumn("__rn", F.row_number().over(wh))
+            batch.withColumn("__h", F.sha2(self.text_col, 256))
+            .withColumn("__rn", F.row_number().over(wh))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        store = self._existing(self.hashes_dir, "h string")
-        fresh = firsts.join(
-            store, firsts["__h"] == store["h"], "left_anti"
-        )
+        store = self._existing(self.hashes_dir, "h")
+        fresh = firsts.join(store, firsts["__h"] == store["h"], "left_anti")
 
-        bk = band_keys(
-            fresh.select(F.col(did).alias("doc_id"), F.col(txt).alias("text"))
+        exploded = with_band_keys(fresh, self.text_col).select(
+            *cols, F.posexplode_outer("__bk").alias("__pos", "__band")
         )
-        index = self._existing(self.bands_dir, "band_key string")
-        hit_index = bk.join(index, "band_key", "left_semi").select("doc_id")
-        lower = (
-            bk.alias("a")
-            .join(
-                bk.alias("b"),
-                (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("b.doc_id").alias("doc_id"))
+        first = F.coalesce(F.col("__pos"), F.lit(0)) == 0
+        rows = exploded.select(
+            did,
+            "__band",
+            first.alias("__first"),
+            *[F.when(first, F.col(c)).alias(c) for c in payload],
         )
-        near = hit_index.unionByName(lower).distinct()
-        return fresh.join(near, fresh[did] == near["doc_id"], "left_anti")
+        # no distinct on the append-only index: a key it holds twice
+        # duplicates only rows of a doc that the hit drops anyway
+        index = self._existing(self.bands_dir, "band_key").select(
+            F.col("band_key").alias("__indexed")
+        )
+        probed = rows.join(index, rows["__band"] == index["__indexed"], "left")
+        # a band-index hit, or a LOWER-id batch doc in the same bucket
+        # (d3's a.id < b.id rule); keyless docs (< 3 tokens) never match
+        near = F.col("__band").isNotNull() & (
+            F.col("__indexed").isNotNull()
+            | (F.col(did) > F.min(did).over(Window.partitionBy("__band")))
+        )
+        flagged = probed.withColumn("__near", near).withColumn(
+            "__near", F.max("__near").over(Window.partitionBy(did))
+        )
+        return flagged.filter(F.col("__first") & ~F.col("__near")).select(*cols)
+
+    def _corpus_rows(self, admitted: DataFrame) -> DataFrame:
+        """The corpus projection of a staged snapshot."""
+        return admitted.drop("__h", "__bk")
 
     def _rollup_agg(self, docs: DataFrame) -> DataFrame:
         pcols = self.partition_cols
@@ -293,14 +327,19 @@ class PrepIntakeSink:
             admitted = self.spark.read.parquet(stage)
 
         if not admitted.isEmpty():
-            docs = admitted.drop("__h")
-            touched = [
-                tuple(r)
-                for r in docs.select(*self.partition_cols).distinct().collect()
-            ]
+            docs = self._corpus_rows(admitted)
+            # the touched partitions serve the redo path only: its
+            # corpus guard and its rollup recount
+            touched = (
+                [
+                    tuple(r)
+                    for r in docs.select(*self.partition_cols).distinct().collect()
+                ]
+                if redo
+                else []
+            )
             try:
                 tx_current_manifest(self.spark, self.store_root)
-                to_append = docs
                 if redo:
                     # corpus-guard, REDO ONLY: the crashed attempt may
                     # have appended already; the steady state never
@@ -313,8 +352,10 @@ class PrepIntakeSink:
                         docs[self.id_col] == present["__present_id"],
                         "left_anti",
                     )
-                if not to_append.isEmpty():
-                    tx_append(self.spark, self.store_root, to_append)
+                    if not to_append.isEmpty():
+                        tx_append(self.spark, self.store_root, to_append)
+                else:
+                    tx_append(self.spark, self.store_root, docs)
             except FileNotFoundError:
                 tx_init(
                     self.spark,
@@ -323,17 +364,18 @@ class PrepIntakeSink:
                     partition_col=self.partition_cols,
                 )
             # index appends are repeat-harmless (semi-join consumers);
-            # the snapshot guarantees the SAME rows on every attempt
-            from kinesis_spark.streaming.neardup import band_keys
+            # the snapshot guarantees the SAME rows on every attempt. A
+            # snapshot staged before ``__bk`` existed gets its keys here.
+            from kinesis_spark.streaming.neardup import with_band_keys
 
-            band_keys(
-                admitted.select(
-                    F.col(self.id_col).alias("doc_id"),
-                    F.col(self.text_col).alias("text"),
-                )
-            ).select("band_key").distinct().write.mode("append").parquet(
-                self.bands_dir
+            keyed = (
+                admitted
+                if "__bk" in admitted.columns
+                else with_band_keys(admitted, self.text_col)
             )
+            keyed.select(F.explode("__bk").alias("band_key")).distinct().write.mode(
+                "append"
+            ).parquet(self.bands_dir)
             admitted.select(F.col("__h").alias("h")).write.mode(
                 "append"
             ).parquet(self.hashes_dir)

@@ -39,7 +39,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kinesis_spark.queries.dedup import N_HASHES, _band_key_expr, _shingles_of
+from kinesis_spark.queries.dedup import (
+    MINHASH_MIN_WORDS,
+    MINHASH_SHINGLE_K,
+    N_HASHES,
+    _band_key_array,
+    _minhash_sig_spark,
+    _shingles_of,
+)
 
 CANDIDATE_SCHEMA = T.StructType(
     [
@@ -52,30 +59,34 @@ CANDIDATE_SCHEMA = T.StructType(
 _STATE_SCHEMA = T.StructType([T.StructField("canon", T.LongType())])
 
 
-def band_keys(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_key) pairs via projection-only MinHash banding —
-    works identically on batch and streaming DataFrames (no aggregation;
+def with_band_keys(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """``docs`` plus ``__bk``: the array of each doc's MinHash band keys,
+    null for a doc under MINHASH_MIN_WORDS tokens. Projection + Generate
+    only, so it works identically on batch and streaming DataFrames:
     array_min over the hashed shingle array replaces the batch twin's
-    explode + groupBy-min, behind a Generate barrier so the shingle
-    pipeline evaluates once per document)."""
-    toks = docs.select(
-        "doc_id", F.explode(F.array(F.split("text", r"[ \t\n\f\r\x0B]+"))).alias("toks")
-    ).filter(F.size("toks") >= 3)
-    sh = toks.select(
-        "doc_id", F.explode(F.array(_shingles_of(F.col("toks")))).alias("sh")
+    explode + groupBy-min, and the two explode-of-one-element-array
+    barriers evaluate the split and the shingle array once per document
+    (dedup._tokens_barrier)."""
+    toks = F.col("__toks")
+    # the gate guards the shingle sequence too: under k tokens it would
+    # index element 0
+    keyed = F.size(toks) >= MINHASH_MIN_WORDS
+    sh = docs.withColumn(
+        "__toks", F.explode(F.array(F.split(text_col, r"[ \t\n\f\r\x0B]+")))
+    ).withColumn(
+        "__sh",
+        F.explode(F.array(F.when(keyed, _shingles_of(toks, k=MINHASH_SHINGLE_K)))),
     )
-    def _mh(seed: int):
-        # NB: the seed must be captured via closure, not a lambda default —
-        # PySpark binds a two-argument transform lambda as (element, index)
-        # and would override the default with the index column
-        prefix = f"{seed}#"
-        return F.array_min(
-            F.transform("sh", lambda s: F.md5(F.concat(F.lit(prefix), s)))
-        ).alias(f"mh{seed}")
+    return (
+        sh.select(*docs.columns, "__sh", *_minhash_sig_spark(F.col("__sh")))
+        .withColumn("__bk", F.when(F.col("__sh").isNotNull(), _band_key_array()))
+        .drop("__sh", *[f"mh{i}" for i in range(N_HASHES)])
+    )
 
-    mh = [_mh(i) for i in range(N_HASHES)]
-    sigs = sh.select("doc_id", *mh)
-    return sigs.select("doc_id", _band_key_expr().alias("band_key"))
+
+def band_keys(docs: DataFrame) -> DataFrame:
+    """(doc_id, band_key) pairs of ``docs`` (doc_id, text)."""
+    return with_band_keys(docs).select("doc_id", F.explode("__bk").alias("band_key"))
 
 
 def _bucket_memory_fn(

@@ -44,6 +44,20 @@ def test_main_pipes_all_bytes(tmp_path):
     assert {e["pk"] for e in entries} == {"mykey"}
 
 
+def test_main_restores_signal_handlers(tmp_path):
+    """main() installs SIGINT/SIGTERM drain handlers for its own run
+    only: an in-process caller gets its previous handlers back."""
+    import signal
+
+    before = [signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)]
+    rc = main(
+        ["s", "-p", "k", "--fake-sink", str(tmp_path / "spool")],
+        stdin=io.BytesIO(b"x" * 1024),
+    )
+    assert rc == 0
+    assert [signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)] == before
+
+
 def test_main_chunks_oversized_records(tmp_path):
     spool = str(tmp_path / "spool")
     # payload far above the 1 MiB record cap must be chunked

@@ -58,10 +58,11 @@ def _clean_reference(spark, sf_dir, tmp_path):
     return _end_state(spark, sink)
 
 
-def _stage_only(sink, batch, batch_id):
-    """The sink's own first step: snapshot the admitted set + marker."""
+def _stage_only(sink, batch, batch_id, drop=()):
+    """The sink's own first step: snapshot the admitted set + marker
+    (less the ``drop`` columns, to stage an older snapshot layout)."""
     stage = sink._stage_dir(batch_id)
-    sink._admit(batch).write.mode("overwrite").parquet(stage)
+    sink._admit(batch).drop(*drop).write.mode("overwrite").parquet(stage)
     os.makedirs(sink._intake_dir(), exist_ok=True)
     with open(sink._marker("staged", batch_id), "w") as f:
         f.write(str(batch_id))
@@ -79,7 +80,7 @@ def test_crash_after_append_before_index_converges(spark, sf_dir, tmp_path):
 
     b2 = _batch(spark, sf_dir, 200, 400)
     admitted = _stage_only(sink, b2, 1)
-    tx_append(spark, sink.store_root, admitted.drop("__h"))
+    tx_append(spark, sink.store_root, sink._corpus_rows(admitted))
     # ... crash. Redeliver the whole batch through the full sink:
     sink.process_batch(b2, 1)
 
@@ -106,7 +107,7 @@ def test_crash_after_bands_before_hashes_converges(spark, sf_dir, tmp_path):
 
     b2 = _batch(spark, sf_dir, 200, 400)
     admitted = _stage_only(sink, b2, 1)
-    tx_append(spark, sink.store_root, admitted.drop("__h"))
+    tx_append(spark, sink.store_root, sink._corpus_rows(admitted))
     band_keys(
         admitted.select("doc_id", "text")
     ).select("band_key").distinct().write.mode("append").parquet(sink.bands_dir)
@@ -135,7 +136,7 @@ def test_crash_after_hashes_before_rollup_converges(spark, sf_dir, tmp_path):
 
     b2 = _batch(spark, sf_dir, 200, 400)
     admitted = _stage_only(sink, b2, 1)
-    tx_append(spark, sink.store_root, admitted.drop("__h"))
+    tx_append(spark, sink.store_root, sink._corpus_rows(admitted))
     from kinesis_spark.streaming.neardup import band_keys
 
     band_keys(
@@ -156,6 +157,29 @@ def test_crash_after_hashes_before_rollup_converges(spark, sf_dir, tmp_path):
     assert rollup == ref[1]
     # the partial attempt really had left the rollup behind
     assert any(stale.get(k, 0) < v[0] for k, v in ref[1].items())
+
+
+def test_redo_of_snapshot_without_band_keys_converges(spark, sf_dir, tmp_path):
+    """A snapshot staged by a sink version that kept no ``__bk`` column
+    (batch columns + ``__h`` only): the redo computes the band keys
+    itself, so the corpus, rollup AND band index equal a clean run's."""
+    ref = _mk_sink(spark, str(tmp_path / "ref"))
+    ref.process_batch(_batch(spark, sf_dir, 0, 200), 0)
+    ref.process_batch(_batch(spark, sf_dir, 200, 400), 1)
+    sink = _mk_sink(spark, str(tmp_path / "e"))
+    sink.process_batch(_batch(spark, sf_dir, 0, 200), 0)
+
+    b2 = _batch(spark, sf_dir, 200, 400)
+    staged = _stage_only(sink, b2, 1, drop=("__bk",))
+    assert "__bk" not in staged.columns and staged.count() > 0
+    # ... crash before any durable write. Redeliver:
+    sink.process_batch(b2, 1)
+
+    def bands(s):
+        return {r.band_key for r in spark.read.parquet(s.bands_dir).collect()}
+
+    assert _end_state(spark, sink) == _end_state(spark, ref)
+    assert bands(sink) == bands(ref)
 
 
 def test_completed_batch_replay_is_a_noop(spark, sf_dir, tmp_path):
