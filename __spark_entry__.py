@@ -10,11 +10,11 @@ they deliberately have NO ``oracle_sql`` entry. Each names a deterministic
 COMPANION query (:func:`companions`) that verifies the same machinery with
 an exact, hash-checkable oracle: ``d8c_mllib_pairs_exact_jaccard`` re-scores
 d8's candidate pairs by exact Jaccard, ``sim5c_brp_recall_vs_exact``
-measures sim5's recall against the exact top-k. A companion's hash-green
-CORRECTNESS row is the exempt query's correctness record; the registry
-rotation keeps exempt queries out of the driver window once they hold
-their one rows-only row, so the artifact carries no recurring
-``no_oracle`` entries (VERDICT r8 finding 3).
+measures sim5's recall against the exact top-k. The companion's exact
+oracle match is the exempt query's correctness record; the exempt query
+itself gets a rows-only check.
+
+All three mappings iterate the registry in name order.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_spark.pins import release_shared_pins
-from kinesis_spark.queries import get_registry, get_registry_ordered
+from kinesis_spark.queries import get_registry
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -39,7 +39,8 @@ def _released(fn: Callable[[SparkSession, str], DataFrame]):
     """Drain the PREVIOUS query's shared pins before building the next
     plan: the driver materializes each result after calling us, so by
     the time the next callable runs, earlier pins are dead weight that
-    would otherwise accumulate across a 50-query round (pins.py)."""
+    would otherwise accumulate across a sweep of the registry
+    (pins.py)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         release_shared_pins(blocking=False)
@@ -49,15 +50,15 @@ def _released(fn: Callable[[SparkSession, str], DataFrame]):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordered so the correctness driver's per-round window rotates across
-    # rounds: round-1-unverified families first (see queries/__init__.py).
-    return {name: _released(q.spark_fn) for name, q in get_registry_ordered().items()}
+    return {
+        name: _released(q.spark_fn) for name, q in sorted(get_registry().items())
+    }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: q.oracle
-        for name, q in get_registry_ordered().items()
+        for name, q in sorted(get_registry().items())
         if q.oracle is not None
     }
 
@@ -68,6 +69,6 @@ def companions() -> dict[str, str]:
     three-function contract above is unchanged."""
     return {
         name: q.companion
-        for name, q in get_registry().items()
+        for name, q in sorted(get_registry().items())
         if q.companion is not None
     }

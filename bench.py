@@ -15,12 +15,12 @@ conflates scheduler noise and first-use JIT with the plan's actual cost.
 "value" is the sum of per-query times plus the two ingest soaks.
 
 Comparison protocol (VERDICT r5): queries run in ONE fixed canonical
-order (name-sorted — never the registry's per-round driver-rotation
-order) after an untimed warm-up pass, so per-query and per-family times
-are comparable across rounds. Same-HEAD suite totals still vary up to
-~10-20% with machine load — compare per-query times from
-BENCH_full.json, not family sums from rotated historical rounds (r1-r5
-BENCH_r*.json predate this protocol; see README "Benchmarking").
+order (name-sorted) after an untimed warm-up pass, so per-query and
+per-family times are comparable across rounds. Same-HEAD suite totals
+still vary up to ~10-20% with machine load — compare per-query times
+from BENCH_full.json, not family sums from historical rounds whose
+query order moved (r1-r5 BENCH_r*.json predate this protocol; see
+README "Benchmarking").
 
 Two JSON lines go to stdout: the full per-query payload (also persisted
 to BENCH_full.json) and, LAST, a compact per-family digest — harnesses
@@ -117,12 +117,10 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
             except Exception:
                 pass  # the timed loop will surface it with attribution
     times: dict[str, float] = {}
-    # FIXED canonical order (name-sorted), deliberately independent of
-    # the registry's driver-rotation order (queries/__init__.py): the
-    # rotation reshuffles which queries the CORRECTNESS window samples
-    # each round, and benching in that order shifted warm-up costs
-    # between families round over round. Name order never changes, so
-    # per-query times are comparable across rounds.
+    # FIXED canonical order (name-sorted), independent of registration
+    # order: a query order that moves shifts warm-up costs between
+    # families round over round. Name order never changes, so per-query
+    # times are comparable across rounds.
     for name, q in sorted(reg.items()):
         best = float("inf")
         for _ in range(2):
@@ -278,15 +276,9 @@ def _current_round() -> int:
     CORRECTNESS_r09.json and burned the next round's name). The marker
     is bumped as the first commit of each round; a stale marker only
     means the stamped file already exists, which the write-once guard
-    turns into a visible stderr nudge — never a burned name. Falls back
-    to the old heuristic if the marker is missing."""
-    try:
-        with open(os.path.join(REPO, "ROUND")) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        from kinesis_spark.queries import _max_round_on_disk
-
-        return _max_round_on_disk() + 1
+    turns into a visible stderr nudge — never a burned name."""
+    with open(os.path.join(REPO, "ROUND")) as f:
+        return int(f.read().strip())
 
 
 def _prev_artifact_path() -> str | None:

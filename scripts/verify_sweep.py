@@ -1,11 +1,20 @@
 #!/usr/bin/env python
-"""The /verify recipe as a runnable script: drive __spark_entry__.entry,
-then every queries() entry at sf0.01 against its oracle_sql() twin —
-through tests/oracle_utils (the SAME comparator the pytest gate uses:
-dtype-kind asserts, bit-exact float compare, targeted diagnostics), so
-the script and the test gate can never drift. PASS = every oracle-backed
-query prints EXACT MATCH and FAILURES is empty (exit 0)."""
+"""Check queries against their DuckDB oracles through the driver contract:
 
+    python scripts/verify_sweep.py [name1,name2,...] [sf_dir]
+
+With no names, drive __spark_entry__.entry, then every queries() entry,
+comparing each with its oracle_sql() twin; with names, check just those
+queries. sf_dir defaults to $SPARK_GRAFT_SF_DIR, else
+/root/testdata/sf0.01. The comparator is tests/oracle_utils (the SAME one
+the pytest gate uses: dtype-kind asserts, bit-exact float compare,
+targeted diagnostics), so the script and the test gate can never drift.
+
+Each query prints one line (EXACT MATCH, rows-only or FAIL); the last
+line is a JSON summary with the counts and the failing names. Exit 0
+when nothing failed."""
+
+import json
 import os
 import sys
 
@@ -20,30 +29,40 @@ from oracle_utils import compare, run_oracle
 
 
 def main() -> int:
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    names = [n for n in (sys.argv[1] if len(sys.argv) > 1 else "").split(",") if n]
+    sf = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"
+    )
+    qs, osql = e.queries(), e.oracle_sql()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print("unknown queries:", unknown, file=sys.stderr)
+        return 2
     spark = get_spark("verify-drive")
     spark.sparkContext.setLogLevel("ERROR")
-    assert len(e.entry(spark).collect()) > 0
-
-    qs, osql = e.queries(), e.oracle_sql()
-    fails = []
-    for name, fn in qs.items():
+    if not names:
+        assert len(e.entry(spark).collect()) > 0
+    exact, rows_only, fails = 0, 0, []
+    for name in names or qs:
         try:
             # bench.py's isolation rule: queries that persist internal
             # subtrees (sim15, sim8, MLlib pipelines) must not stack 191
             # cached relations across the sweep
             release_shared_pins()
             spark.catalog.clearCache()
-            df = fn(spark, sf)
+            df = qs[name](spark, sf)
             if name not in osql:
                 print(name, "rows-only", df.count(), flush=True)
+                rows_only += 1
                 continue
             compare(df, run_oracle(osql[name], sf), name)
             print(name, "EXACT MATCH", flush=True)
+            exact += 1
         except Exception as ex:  # noqa: BLE001 - collect, report all
             fails.append(name)
-            print(name, "FAIL", repr(ex)[:300], flush=True)
-    print("FAILURES:", fails, flush=True)
+            print(name, "FAIL", repr(ex)[:500], flush=True)
+    print(json.dumps({"exact": exact, "rows_only": rows_only,
+                      "fail": len(fails), "failures": fails}), flush=True)
     spark.stop()
     return 1 if fails else 0
 
