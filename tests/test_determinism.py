@@ -1,13 +1,28 @@
-"""Java's \\s and RE2's \\s disagree on U+000B, so every tokenizer and
-oracle spells its whitespace class explicitly; these tests pin that the
-two engines then split and strip text identically. (Run-to-run
-determinism of each query is checked in test_queries_oracle.)"""
+"""Every registered query must be run-to-run deterministic: the driver's
+correctness gate hashes values, so nondeterminism (unstable top-k ties,
+RNG, partitioning-dependent output) would fail intermittently there.
+Catch it here deterministically by running each query twice."""
 
 from __future__ import annotations
+
+import pytest
 
 from kinesis_spark.queries import get_registry
 
 REGISTRY = get_registry()
+
+# Iterative/stateful queries excluded: d9's localCheckpoint materializes
+# eagerly, doubling runtime for no added signal (its oracle test already
+# pins the exact result).
+SKIP = {"d9_dedup_components"}
+
+
+@pytest.mark.parametrize("name", sorted(n for n in REGISTRY if n not in SKIP))
+def test_query_is_deterministic(spark, sf_dir, name):
+    fn = REGISTRY[name].spark_fn
+    a = sorted(map(str, fn(spark, sf_dir).collect()))
+    b = sorted(map(str, fn(spark, sf_dir).collect()))
+    assert a == b
 
 
 def test_tokenizer_class_agrees_on_vertical_tab(spark):

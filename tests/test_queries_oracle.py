@@ -1,10 +1,5 @@
 """Every registered query with an oracle must match DuckDB exactly at
 sf0.001 (fast inner loop; the driver runs the same comparison at sf0.01).
-
-Every query must also be run-to-run deterministic: the driver's
-correctness gate hashes values, so nondeterminism (unstable top-k ties,
-RNG, partitioning-dependent output) would fail intermittently there.
-Each test therefore runs its query a second time and compares the rows.
 """
 
 from __future__ import annotations
@@ -19,41 +14,20 @@ WITH_ORACLE = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 NO_ORACLE = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
 
 
-# d9's localCheckpoint materializes eagerly, so a second run doubles its
-# runtime for no added signal (its oracle match already pins the result).
-NO_RERUN = {"d9_dedup_components"}
-
-
-def _rows(df) -> list[str]:
-    return sorted(map(str, df.collect()))
-
-
-def _assert_rerun_matches(spark, sf_dir, name, first: list[str]) -> None:
-    if name not in NO_RERUN:
-        assert _rows(REGISTRY[name].spark_fn(spark, sf_dir)) == first, (
-            f"{name}: second run differs from the first"
-        )
-
-
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_query_matches_oracle(spark, sf_dir, name):
     q = REGISTRY[name]
-    # cached so the oracle compare and the row snapshot share ONE run;
-    # unpersisted before the rerun, which would otherwise read the cache
-    got = q.spark_fn(spark, sf_dir).cache()
-    try:
-        compare(got, run_oracle(q.oracle, sf_dir), name)
-        first = _rows(got)
-    finally:
-        got.unpersist(blocking=True)
-    _assert_rerun_matches(spark, sf_dir, name, first)
+    got = q.spark_fn(spark, sf_dir)
+    want = run_oracle(q.oracle, sf_dir)
+    compare(got, want, name)
 
 
 @pytest.mark.parametrize("name", NO_ORACLE)
 def test_query_runs(spark, sf_dir, name):
-    df = REGISTRY[name].spark_fn(spark, sf_dir)
+    q = REGISTRY[name]
+    df = q.spark_fn(spark, sf_dir)
+    assert df.count() >= 0
     assert len(df.schema.fields) > 0
-    _assert_rerun_matches(spark, sf_dir, name, _rows(df))
 
 
 def test_s14_no_near_dup_pair_straddles_splits(spark, sf_dir):

@@ -193,11 +193,20 @@ def _make_lossy_condput_arbiter():
     INJECTS losses: ~20% of winning attempts are failed with a spurious
     412 BEFORE install (the client-observable shape of a retried-after-
     timeout PUT whose first attempt never landed) — the writer must
-    retry and converge."""
+    retry and converge. A winning PUT lands whole, as on an object
+    store: the body is written under a temp name and renamed in, so a
+    concurrent reader never sees a torn manifest."""
     import random
     import threading
+    import uuid
 
-    from kinesis_spark.txstore import CommitArbiter, TxConflictError, _fs_write_text
+    from kinesis_spark.txstore import (
+        CommitArbiter,
+        TxConflictError,
+        _fs,
+        _fs_write_text,
+        _jpath,
+    )
 
     class LossyConditionalPutArbiter(CommitArbiter):
         def __init__(self):
@@ -213,7 +222,9 @@ def _make_lossy_condput_arbiter():
                 if self._rng.random() < 0.2:
                     raise TxConflictError(f"injected loss: {key}")
                 self._committed.add(key)
-                _fs_write_text(spark, key, text)
+                tmp = f"{log_dir}/.tmp-{uuid.uuid4().hex[:12]}.json"
+                _fs_write_text(spark, tmp, text)
+                _fs(spark, log_dir).rename(_jpath(spark, tmp), _jpath(spark, key))
 
     return LossyConditionalPutArbiter()
 
