@@ -36,11 +36,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _released(fn: Callable[[SparkSession, str], DataFrame]):
-    """Drain the PREVIOUS query's shared pins before building the next
-    plan: the driver materializes each result after calling us, so by
-    the time the next callable runs, earlier pins are dead weight that
-    would otherwise accumulate across a sweep of the registry
-    (pins.py)."""
+    """Release the PREVIOUS query's pins (persists and checkpoints)
+    before building the next plan: the driver materializes each result
+    after calling us, so by the time the next callable runs, earlier
+    pins are dead weight that would otherwise accumulate across a sweep
+    of the registry (pins.py)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         release_shared_pins(blocking=False)

@@ -37,7 +37,6 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from kinesis_spark.ordering import release_checkpoints  # noqa: E402
 from kinesis_spark.pins import release_shared_pins  # noqa: E402
 from kinesis_spark.queries import get_registry  # noqa: E402
 from kinesis_spark.session import get_spark  # noqa: E402
@@ -111,8 +110,6 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
         if name in reg:
             try:
                 release_shared_pins()
-                release_checkpoints()
-                spark.catalog.clearCache()
                 materialize(reg[name].spark_fn(spark, sf_dir))
             except Exception:
                 pass  # the timed loop will surface it with attribution
@@ -126,19 +123,16 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
         for _ in range(2):
             try:
                 # isolate queries from each other: several registry
-                # queries persist() an internal subtree (sim6/sim13,
-                # MLlib vector pipelines); 160+ queries of accumulated
-                # cache entries evict under memory pressure and inflate
-                # LATER queries' times by up to ~2x (measured: d13 4.6 s
-                # in-sequence vs 2.5 s isolated). Clearing per attempt
-                # measures each query cold-cache and reproducibly —
-                # a query's own persist still helps within its run.
-                # release_checkpoints drains global_row_number's
-                # localCheckpoint blocks (s17/p12) — block-manager RDD
-                # storage that clearCache can't see (ADVICE r10).
+                # queries persist an internal subtree (sim6/sim13,
+                # MLlib vector pipelines) or checkpoint iteration state
+                # (g1, d9, sim11, global_row_number's s17/p12); 160+
+                # queries of accumulated pins evict under memory
+                # pressure and inflate LATER queries' times by up to ~2x
+                # (measured: d13 4.6 s in-sequence vs 2.5 s isolated).
+                # Releasing every pin per attempt measures each query
+                # cold-cache and reproducibly — a query's own pins still
+                # help within its run.
                 release_shared_pins()
-                release_checkpoints()
-                spark.catalog.clearCache()
                 t0 = time.monotonic()
                 materialize(q.spark_fn(spark, sf_dir))
                 best = min(best, time.monotonic() - t0)

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_spark.checkpoints import pin
+from kinesis_spark.pins import pin, scope
 from kinesis_spark.queries.similarity import ivf_assign, ivf_codebook
 
 
@@ -248,6 +248,7 @@ def build_ivf_index(
     cells.write.mode("overwrite").partitionBy(*parts).parquet(f"{index_dir}/cells")
 
 
+@scope()
 def append_to_ivf_index(
     spark: SparkSession, new_embeddings: DataFrame, index_dir: str
 ) -> int:
@@ -434,6 +435,7 @@ def _delete_cell_dirs(spark: SparkSession, cells_dir: str, hot: list) -> None:
             fs.delete(p, True)
 
 
+@scope()
 def rebalance_ivf_cells(
     spark: SparkSession,
     index_dir: str,

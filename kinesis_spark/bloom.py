@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_spark.checkpoints import pin_lazy
+from kinesis_spark.pins import pin_lazy
 
 DEFAULT_M_BITS = 1 << 16  # 1024 x 64-bit words = 8 KiB bitmap
 DEFAULT_K = 4  # hash functions per key

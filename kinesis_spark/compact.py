@@ -16,7 +16,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kinesis_spark.checkpoints import pin
+from kinesis_spark.pins import pin, scope
 
 
 def dataset_bytes(spark: SparkSession, df: DataFrame) -> int:
@@ -65,6 +65,7 @@ def dataset_bytes(spark: SparkSession, df: DataFrame) -> int:
     return total
 
 
+@scope()
 def compact_dataset(
     spark: SparkSession,
     in_dir: str,
@@ -83,7 +84,7 @@ def compact_dataset(
     In-place compaction (``out_dir == in_dir`` — the canonical
     maintenance use) materializes the shaped data first: Spark refuses
     to overwrite a path it is still reading from, so the rewrite goes
-    through a ``checkpoints.pin`` (the upsert/rollup pattern) before
+    through a ``pins.pin`` (the upsert/rollup pattern) before
     the overwrite.
     """
     import os

@@ -42,11 +42,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.partitioned_store import (
     dynamic_partition_overwrite,
     touched_partition_filter,
 )
+from kinesis_spark.pins import pin, scope
 
 AUDIT_SCHEMA = StructType(
     [
@@ -74,6 +74,7 @@ def _delete_dir(spark: SparkSession, path: str) -> None:
     fs.delete(jpath, True)
 
 
+@scope()
 def erase_by_key(
     spark: SparkSession,
     target_dir: str,

@@ -12,7 +12,7 @@ faithful semantics = rejoin the byte stream per micro-batch, then chunk.
 :func:`unframed_rechunk` is that operator, built as a distributed
 re-framing rather than a driver-side concat:
 
-1. Range-repartition rows by the order column and ``checkpoints.pin`` the
+1. Range-repartition rows by the order column and ``pins.pin`` the
    micro-batch (pins partition ids so the two consumers below agree; a
    micro-batch is bounded, so materializing it is bounded too).
 2. Two-level prefix sum for each row's global byte offset: per-partition
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_spark.checkpoints import pin
+from kinesis_spark.pins import pin, scope
 
 
 def unframed_rechunk(
@@ -172,6 +172,7 @@ class StreamRechunker:
         self.carry = b""
         self.chunks_emitted = 0
 
+    @scope()
     def rechunk_batch(
         self, batch: DataFrame, order_col: str, data_col: str = "data"
     ) -> list[bytes]:

@@ -17,64 +17,25 @@ Correctness does not depend on where the range boundaries fall as long
 as the order key is TOTAL (unique per row): ranges are disjoint and
 ordered, so offset + local rank reproduces the exact global rank a
 single-task ROW_NUMBER would assign — which is what the DuckDB oracles
-pin. The ranged relation is LOCAL-CHECKPOINTED, not merely persisted
+pin. The ranged relation is CHECKPOINTED, not merely persisted
 (ADVICE r9): ``repartitionByRange`` boundaries come from sampling whose
 result depends on upstream row order, so a persist-only pin that lost a
 cache block (executor failure) would RECOMPUTE that partition under
 freshly-sampled boundaries and silently mis-number rows against the
-oracle. The checkpoint truncates lineage — there is nothing to recompute
-from — so a lost block fails the job loudly instead. Checkpoint blocks
-are registered in this module's registry; consumers free them
-deterministically with :func:`release_checkpoints` (the ContextCleaner
-would eventually reclaim them on driver GC, but "when the JVM happens
-to GC" is not a storage budget — ADVICE r10).
+oracle. The checkpoint truncates lineage, so there is nothing to
+recompute from and a lost block fails the job loudly instead. It is a
+``pins.pin_lazy`` pin, freed by the caller's ``release_shared_pins``.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kinesis_spark.pins import pin_lazy
+
 GLOBAL_ORDER_PARTITIONS = 32
-
-# Checkpoint registry (ADVICE r10): localCheckpoint blocks live in the
-# block manager as RDD storage, OUTSIDE the CacheManager — neither
-# ``spark.catalog.clearCache()`` nor ``DataFrame.unpersist()`` frees
-# them, and the ContextCleaner only reclaims them when the DRIVER JVM
-# happens to GC the checkpointed RDD reference. A long bench/driver
-# session invoking s17/p12 repeatedly therefore accumulates
-# MEMORY_AND_DISK blocks until an unrelated GC runs. Mirror of
-# pins.py's pin_shared registry: every checkpoint registers here, and
-# :func:`release_checkpoints` lets the CONSUMER (bench.py's per-query
-# isolation reset, verify sweeps) unpersist the underlying RDDs
-# explicitly once the results are materialized.
-_CHECKPOINTS: list[DataFrame] = []
-_CP_LOCK = threading.Lock()
-
-
-def release_checkpoints(blocking: bool = False) -> int:
-    """Unpersist the block-manager storage of every registered
-    ``global_row_number`` checkpoint; returns how many were freed. The
-    checkpointed Dataset's plan is a ``LogicalRDD`` whose ``rdd`` holds
-    the persisted blocks — that RDD is what must be unpersisted (the
-    Dataset-level unpersist only talks to the CacheManager). Safe after
-    the session died (dead handles are skipped, never raised). Callers
-    must not release while a plan that still reads the checkpoint is
-    mid-flight — same single-consumer contract as release_shared_pins."""
-    with _CP_LOCK:
-        drained = list(_CHECKPOINTS)
-        _CHECKPOINTS.clear()
-    n = 0
-    for df in reversed(drained):
-        try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
-            n += 1
-        except Exception:  # noqa: BLE001 - session stopped / plan shape drift
-            pass
-    return n
 
 
 def global_row_number(
@@ -87,16 +48,14 @@ def global_row_number(
     ``ORDER BY order_cols`` — computed without a single-partition sort.
     ``order_cols`` must be a total order (unique per row); ties would
     otherwise break by physical placement, which no oracle can pin."""
-    # lazy localCheckpoint: materialized by the counts job below, read
+    # lazy checkpoint: materialized by the counts job below, read
     # back (never recomputed — lineage is gone) by the final plan. See
     # module docstring for why persist alone is not enough here.
     ranged = (
         df.repartitionByRange(num_partitions, *order_cols)
         .withColumn("_gpid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(pin_lazy)
     )
-    with _CP_LOCK:
-        _CHECKPOINTS.append(ranged)
     counts = {
         r["_gpid"]: r["cnt"]
         for r in ranged.groupBy("_gpid")

@@ -24,9 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.io import ensure_min_partitions, load_table
-from kinesis_spark.pins import pin_shared
+from kinesis_spark.pins import pin, pin_shared
 from kinesis_spark.queries import WS_RE, register
 
 N_HASHES = 8  # minhash signature length

@@ -7,7 +7,7 @@ Scale design (the d9/sim11 iterative discipline):
   materialized ONCE. The STATIC edge relation uses pins.pin_shared
   (persist: keeps partitioning + size stats visible to every round's
   join, keeps lineage so executor loss recomputes); the MUTABLE
-  per-round rank state uses checkpoints.pin (reliable checkpoint when
+  per-round rank state uses pins.pin (reliable checkpoint when
   a checkpoint dir is configured — survives executor loss — else
   localCheckpoint). Every iteration replays nothing upstream.
 - One iteration = one shuffle: edges join ranks on src (both sides
@@ -35,9 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.io import load_table
-from kinesis_spark.pins import pin_shared
+from kinesis_spark.pins import pin, pin_shared
 from kinesis_spark.queries import register
 
 PR_ITERS = 3
@@ -167,7 +166,7 @@ def g1_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this side's layout and shuffles only the (node, rank) relation —
     # measured 7.3 s -> 4.3 s at sf0.1 (the classic Pregel layout: park
     # the big static relation, move the small mutable one).
-    # pin_shared (persist), NOT checkpoints.pin, for the STATIC side
+    # pin_shared (persist), NOT the checkpoint pin, for the STATIC side
     # (OPTIMIZATION r11): a checkpoint surfaces as `Scan ExistingRDD,
     # UnknownPartitioning` under AQE, so every round re-Exchanged the
     # edge relation and planned blind SMJs — the InMemoryRelation keeps
@@ -395,7 +394,7 @@ def g3_neardup_triangles(
     pairs = candidates if candidates is not None else d14_capped_lsh_pairs(
         spark, sf_dir
     )
-    # checkpoints.pin, NOT the persist-based pin_shared: the g1/g2
+    # the checkpoint pin, NOT the persist-based pin_shared: the g1/g2
     # static-relation persist change was A/B'd here too and measured
     # +18% at x10 (same-session best-of-2) — e/directed feed plain
     # rebroadcast-or-shuffle joins with no reusable key layout, so the

@@ -598,7 +598,7 @@ def p3_incremental_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from kinesis_spark.bloom import build_bloom, densify_bloom, probe_bloom_dense
-    from kinesis_spark.checkpoints import pin
+    from kinesis_spark.pins import pin
 
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     base = _gated_base(d)
@@ -1480,14 +1480,14 @@ def p14_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed parenthesization, written identically in both engines.
 
     Scale shape: ONE corpus scan — the source-count-sized per-source
-    relation is pinned (checkpoints.pin) before the plan forks into the
+    relation is pinned (pins.pin) before the plan forks into the
     total/normalizer branches, so the downstream one-row broadcasts and
     the final join all read the tiny pinned relation, not the corpus
     (three lineage branches would otherwise each replay the scan). The
     one shuffle carries (source, two counts), never text; no
     SinglePartition window over the data. Output is source-count-sized.
     At 100 TB this is a scan plus two scalar reductions."""
-    from kinesis_spark.checkpoints import pin
+    from kinesis_spark.pins import pin
 
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     per_src = d.groupBy("source").agg(

@@ -8,8 +8,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.io import load_table
+from kinesis_spark.pins import pin
 from kinesis_spark.queries import register
 from kinesis_spark.shards import hash_bucket, hash_u32
 

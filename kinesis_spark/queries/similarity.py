@@ -23,9 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.io import load_table
-from kinesis_spark.pins import pin_shared
+from kinesis_spark.pins import pin, pin_shared
 from kinesis_spark.queries import register
 
 N_QUERIES = 10
@@ -1096,7 +1095,7 @@ def sim11_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
       (cid, vector) structs) that BROADCASTS to every task — the corpus
       is scanned once per assignment, never shuffled by cluster for the
       argmin itself;
-    - ``checkpoints.pin`` truncates lineage each round (the d9 pattern,
+    - ``pins.pin`` truncates lineage each round (the d9 pattern,
       dedup.py) so the final plan replays nothing — without it the plan
       nests every prior round and re-scans exponentially;
     - centroid recompute is the ONLY shuffle per round: posexplode to

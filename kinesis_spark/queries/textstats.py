@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.io import ensure_min_partitions, load_table
+from kinesis_spark.pins import pin
 from kinesis_spark.queries import WS_CHARS, WS_RE, register
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -1029,7 +1029,7 @@ def t14_bpe_merge_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     word inventories, orders of magnitude below corpus rows at 100 TB);
     each round is a partial-agg pair count over that table, a one-row
     argmax, and a map-side merge with the single-row winner broadcast.
-    State is pinned per round (checkpoints.pin), so {M} merges = {M} short
+    State is pinned per round (pins.pin), so {M} merges = {M} short
     vocab-table shuffles, never a second corpus scan.
     """
     merges, _ = _bpe_learn(spark, sf_dir)

@@ -16,12 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.partitioned_store import (
     dynamic_partition_overwrite,
     is_missing_store,
     touched_partition_filter,
 )
+from kinesis_spark.pins import pin, scope
 
 #: rollup schema: day (date), event_type, n_events (long), sum_value decimal
 _STATE_COLS = ("day", "event_type", "n_events", "sum_value")
@@ -61,6 +61,7 @@ def _merge(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
+@scope()
 def refresh_daily_rollup(
     spark: SparkSession, rollup_dir: str, new_events: DataFrame
 ) -> int:
@@ -91,6 +92,7 @@ def refresh_daily_rollup(
     return len(days)
 
 
+@scope()
 def tx_refresh_daily_rollup(
     spark: SparkSession, root: str, new_events: DataFrame
 ) -> int:

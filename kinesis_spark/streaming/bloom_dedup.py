@@ -58,7 +58,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.bloom import (
     DEFAULT_K,
     DEFAULT_M_BITS,
@@ -66,6 +65,7 @@ from kinesis_spark.bloom import (
     densify_bloom,
     probe_bloom_dense,
 )
+from kinesis_spark.pins import pin, scope
 
 _MARKER = "_last_batch"
 
@@ -199,6 +199,7 @@ class BloomDedupSink:
         return build_bloom(store, "h", self.m_bits, self.k)
 
     # -- the batch hook ---------------------------------------------------
+    @scope()
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         # resolve the token ONCE per batch: when the checkpoint metadata
         # is briefly unreadable the boot fallback mints a fresh nonce per

@@ -49,7 +49,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_spark.pins import release_shared_pins
+from kinesis_spark.pins import scope
 from kinesis_spark.streaming.bloom_dedup import (
     BloomDedupSink,
     _read_marker,
@@ -73,6 +73,7 @@ class ChunkDedupSink(BloomDedupSink):
             return None
         return self.spark.read.parquet(self._chunk_dir)
 
+    @scope()
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from kinesis_spark.prep_index import chunk_dedup_rewrite
         from kinesis_spark.queries.textstats import chunk_relation
@@ -112,10 +113,6 @@ class ChunkDedupSink(BloomDedupSink):
         chunk_sub = os.path.join(self._chunk_dir, f"ingest_batch={key}")
         fresh.write.mode("overwrite").parquet(chunk_sub)
         _write_marker(self.state_dir, token, batch_id)
-        # drain the rewrite's internal batch pin (this sink is the
-        # single owner of the process's shared-pin registry by the
-        # state_dir single-writer contract)
-        release_shared_pins()
 
 
 def start_chunk_dedup(

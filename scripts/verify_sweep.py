@@ -11,8 +11,10 @@ the pytest gate uses: dtype-kind asserts, bit-exact float compare,
 targeted diagnostics), so the script and the test gate can never drift.
 
 Each query prints one line (EXACT MATCH, rows-only or FAIL); the last
-line is a JSON summary with the counts and the failing names. Exit 0
-when nothing failed."""
+line is a JSON summary with the counts, the failing names and
+``leaked_rdds``: the stored-RDD count after the last pin release minus
+the count before the sweep. Exit 0 when nothing failed and nothing
+leaked."""
 
 import json
 import os
@@ -28,6 +30,10 @@ from kinesis_spark.session import get_spark
 from oracle_utils import compare, run_oracle
 
 
+def _stored_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
 def main() -> int:
     names = [n for n in (sys.argv[1] if len(sys.argv) > 1 else "").split(",") if n]
     sf = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
@@ -40,16 +46,16 @@ def main() -> int:
         return 2
     spark = get_spark("verify-drive")
     spark.sparkContext.setLogLevel("ERROR")
+    before = _stored_rdds(spark)
     if not names:
         assert len(e.entry(spark).collect()) > 0
     exact, rows_only, fails = 0, 0, []
     for name in names or qs:
         try:
-            # bench.py's isolation rule: queries that persist internal
-            # subtrees (sim15, sim8, MLlib pipelines) must not stack 191
-            # cached relations across the sweep
+            # bench.py's isolation rule: queries that pin internal
+            # subtrees (sim15, sim8, MLlib pipelines, the iterative
+            # family) must not stack 191 pinned relations across the sweep
             release_shared_pins()
-            spark.catalog.clearCache()
             df = qs[name](spark, sf)
             if name not in osql:
                 print(name, "rows-only", df.count(), flush=True)
@@ -61,10 +67,13 @@ def main() -> int:
         except Exception as ex:  # noqa: BLE001 - collect, report all
             fails.append(name)
             print(name, "FAIL", repr(ex)[:500], flush=True)
+    release_shared_pins()
+    leaked = _stored_rdds(spark) - before
     print(json.dumps({"exact": exact, "rows_only": rows_only,
-                      "fail": len(fails), "failures": fails}), flush=True)
+                      "fail": len(fails), "failures": fails,
+                      "leaked_rdds": leaked}), flush=True)
     spark.stop()
-    return 1 if fails else 0
+    return 1 if fails or leaked else 0
 
 
 if __name__ == "__main__":

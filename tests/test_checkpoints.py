@@ -1,4 +1,4 @@
-"""Reliable-checkpoint behavior of the iterative family (checkpoints.pin).
+"""Reliable-checkpoint behavior of the iterative family (pins.pin).
 
 The contract under test (VERDICT r4 #1): with no checkpoint dir the
 engine keeps the fast localCheckpoint path; the moment a production
@@ -14,7 +14,7 @@ import os
 
 import pytest
 
-from kinesis_spark.checkpoints import pin, pin_lazy
+from kinesis_spark.pins import pin, pin_lazy
 
 
 @contextlib.contextmanager

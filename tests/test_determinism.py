@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from kinesis_spark.pins import release_shared_pins
 from kinesis_spark.queries import get_registry
 
 REGISTRY = get_registry()
@@ -15,6 +16,14 @@ REGISTRY = get_registry()
 # eagerly, doubling runtime for no added signal (its oracle test already
 # pins the exact result).
 SKIP = {"d9_dedup_components"}
+
+
+@pytest.fixture(autouse=True)
+def _release_pins():
+    """Free each test's query pins once it has materialized them, so
+    pins do not pile up across the module's parametrized queries."""
+    yield
+    release_shared_pins()
 
 
 @pytest.mark.parametrize("name", sorted(n for n in REGISTRY if n not in SKIP))

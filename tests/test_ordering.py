@@ -61,11 +61,9 @@ def test_skewed_key_distribution(spark):
 def test_release_checkpoints_frees_block_storage(spark):
     """ADVICE r10: localCheckpoint blocks live as block-manager RDD
     storage — clearCache/unpersist never touch them, and waiting for
-    driver GC is not a storage budget. release_checkpoints must free
+    driver GC is not a storage budget. release_shared_pins must free
     them deterministically once the consumer has materialized."""
-    from kinesis_spark.ordering import release_checkpoints
-
-    release_checkpoints()  # drain pins left by earlier tests
+    release_shared_pins()  # drain pins left by earlier tests
     before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     df = spark.range(5000).select(
         (F.col("id") * 13 % 5000).alias("k"), F.col("id").alias("tie")
@@ -74,12 +72,12 @@ def test_release_checkpoints_frees_block_storage(spark):
     assert out.count() == 5000
     stored = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert stored > before, "checkpoint blocks should be pinned"
-    assert release_checkpoints(blocking=True) >= 1
+    assert release_shared_pins(blocking=True) >= 1
     after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     assert after < stored, "release must drop the checkpointed RDD"
+    assert after == before, "release must drop every pin the call made"
     # idempotent and safe when empty
-    assert release_checkpoints() == 0
-    release_shared_pins()
+    assert release_shared_pins() == 0
 
 
 def test_no_single_partition_exchange(spark):

@@ -6,12 +6,21 @@ from __future__ import annotations
 
 import pytest
 
+from kinesis_spark.pins import release_shared_pins
 from kinesis_spark.queries import get_registry
 from tests.oracle_utils import compare, run_oracle
 
 REGISTRY = get_registry()
 WITH_ORACLE = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 NO_ORACLE = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
+
+
+@pytest.fixture(autouse=True)
+def _release_pins():
+    """Free each test's query pins once it has materialized them, so
+    pins do not pile up across the module's parametrized queries."""
+    yield
+    release_shared_pins()
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
