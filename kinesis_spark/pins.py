@@ -34,7 +34,11 @@ intact::
 
 Release: :func:`release_shared_pins` frees every registered pin —
 ``unpersist`` for a persist; for a checkpoint, ``unpersist`` of the RDD
-behind the checkpointed plan (its ``LogicalRDD``), because
+behind the checkpointed plan (its ``LogicalRDD``) plus, for a reliable
+one, its ``rdd-*`` files in the checkpoint directory (Spark removes
+those only with ``spark.cleaner.referenceTracking.cleanCheckpoints``,
+off by default, so a long-lived session would grow the directory by one
+per pin). The unpersist is needed because
 localCheckpoint blocks live in the block manager outside the
 CacheManager, where neither ``DataFrame.unpersist`` nor clearing the
 catalog cache reaches them. Left to the ContextCleaner they are freed
@@ -121,7 +125,14 @@ def _free(pins: list[tuple[DataFrame, bool]], blocking: bool) -> int:
     for df, checkpoint in reversed(pins):
         try:
             if checkpoint:
-                df._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
+                rdd = df._jdf.queryExecution().analyzed().rdd()
+                rdd.unpersist(blocking)
+                files = rdd.getCheckpointFile()  # defined once reliably written
+                if files.isDefined():
+                    jvm = df.sparkSession.sparkContext._jvm
+                    path = jvm.org.apache.hadoop.fs.Path(files.get())
+                    conf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
+                    path.getFileSystem(conf).delete(path, True)
             else:
                 df.unpersist(blocking=blocking)
             n += 1

@@ -42,7 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kinesis_spark.bloom import build_bloom, densify_bloom, probe_bloom_dense
-from kinesis_spark.pins import pin_shared
+from kinesis_spark.minhash import band_key_array, signatures
+from kinesis_spark.pins import pin_shared, scope
 
 
 def _gated(d: DataFrame) -> DataFrame:
@@ -67,19 +68,13 @@ def build_prep_index(spark: SparkSession, corpus_docs: DataFrame, index_dir: str
     ).parquet(hash_dir)
     hashes = spark.read.parquet(hash_dir)
     densify_bloom(build_bloom(hashes, "h")).write.mode("overwrite").parquet(bloom_dir)
-    bands = _band_keys(base).select("band_key").distinct()
-    bands.write.mode("overwrite").parquet(band_dir)
+    bands = signatures(base).select(F.explode(band_key_array()).alias("band_key"))
+    bands.distinct().write.mode("overwrite").parquet(band_dir)
     return {
         "hashes": spark.read.parquet(hash_dir).count(),
         "bloom_words": spark.read.parquet(bloom_dir).count(),
         "bands": spark.read.parquet(band_dir).count(),
     }
-
-
-def _band_keys(df: DataFrame, *carry: str) -> DataFrame:
-    from kinesis_spark.queries.pipelines import _band_keys_of
-
-    return _band_keys_of(df, *carry)
 
 
 def incremental_prep_indexed(
@@ -141,7 +136,8 @@ def incremental_prep_indexed(
     rem = flagged.filter(~F.col("exact_dup"))
     cband_keys = spark.read.parquet(os.path.join(index_dir, "bands"))
     near = (
-        _band_keys(rem)
+        signatures(rem)
+        .select("doc_id", F.explode(band_key_array()).alias("band_key"))
         .join(cband_keys, "band_key", "left_semi")
         .select("doc_id")
         .distinct()
@@ -276,24 +272,33 @@ def append_gram_index(spark: SparkSession, batch_docs: DataFrame, index_dir: str
     gram hashes appended."""
     from kinesis_spark.queries.dedup import positional_tokens, window_hashes
 
-    gram_dir = os.path.join(index_dir, "grams")
     batch = window_hashes(positional_tokens(batch_docs)).select("h").distinct()
-    existing = spark.read.parquet(gram_dir)
-    # anti-join orientation: batch (small) is the left side and the
-    # store side arrives via broadcast of the batch keys, so the
-    # corpus-sized store is scanned once, pruned to one column
+    return _append_new_keys(spark, batch, os.path.join(index_dir, "grams"), "h")
+
+
+def new_keys(batch_keys: DataFrame, store: DataFrame, key: str) -> DataFrame:
+    """The distinct ``key`` values of ``batch_keys`` (one column,
+    distinct) that ``store`` does not hold yet. Orientation: the batch
+    (small) is the left side and reaches the store as a broadcast, so
+    the corpus-sized store is scanned once, pruned to one column, never
+    shuffled."""
     matched = (
-        existing.join(F.broadcast(batch), "h", "left_semi")
-        .select("h")
-        .distinct()
+        store.join(F.broadcast(batch_keys), key, "left_semi").select(key).distinct()
     )
-    # pinned: count + write are two consumers; without it each re-scans
-    # the corpus-sized store and re-tokenizes the batch
-    fresh = batch.join(F.broadcast(matched), "h", "left_anti").persist()
+    return batch_keys.join(F.broadcast(matched), key, "left_anti")
+
+
+@scope()
+def _append_new_keys(
+    spark: SparkSession, batch_keys: DataFrame, path: str, key: str
+) -> int:
+    """Append :func:`new_keys` of ``batch_keys`` to the store at
+    ``path``; returns how many. Pinned: count + write are two consumers;
+    without it each re-scans the store and re-derives the batch."""
+    fresh = pin_shared(new_keys(batch_keys, spark.read.parquet(path), key))
     n = fresh.count()
     if n:
-        fresh.write.mode("append").parquet(gram_dir)
-    fresh.unpersist()
+        fresh.write.mode("append").parquet(path)
     return n
 
 
@@ -447,23 +452,11 @@ def append_chunk_index(
     harmless because probes ``.distinct()`` the matched keys)."""
     from kinesis_spark.queries.textstats import chunk_relation
 
-    chunk_dir = os.path.join(index_dir, "chunks")
     batch = (
         chunk_relation(batch_docs.select("doc_id", "text"), text=False)
         .select("chunk_hash")
         .distinct()
     )
-    existing = spark.read.parquet(chunk_dir)
-    matched = (
-        existing.join(F.broadcast(batch), "chunk_hash", "left_semi")
-        .select("chunk_hash")
-        .distinct()
+    return _append_new_keys(
+        spark, batch, os.path.join(index_dir, "chunks"), "chunk_hash"
     )
-    fresh = batch.join(
-        F.broadcast(matched), "chunk_hash", "left_anti"
-    ).persist()
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(chunk_dir)
-    fresh.unpersist()
-    return n

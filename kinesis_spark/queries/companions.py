@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kinesis_spark.io import load_table
+from kinesis_spark.minhash import _SHINGLES_SQL, _shingles_of, _tokens_barrier
 from kinesis_spark.queries import register
-from kinesis_spark.queries.dedup import _SHINGLES_SQL, _shingles_of, _tokens_barrier
 
 # Fixed deterministic corpus bound for the d8c instrument (the d21
 # discipline): verifies the MLlib machinery exactly at a fixed cost —

@@ -25,69 +25,25 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kinesis_spark.io import ensure_min_partitions, load_table
+from kinesis_spark.minhash import (
+    BAND_ROWS,
+    MIN_WORDS_SQL,
+    MINHASH_MIN_WORDS,
+    N_HASHES,
+    _SHINGLES_SQL,
+    _shingles_of,
+    _tokens_barrier,
+    band_key_array,
+    signatures,
+    sigs_bands_sql,
+)
 from kinesis_spark.pins import pin, pin_shared
 from kinesis_spark.queries import WS_RE, register
 
-N_HASHES = 8  # minhash signature length
-BAND_ROWS = 2  # rows per LSH band → 4 bands
-MINHASH_SHINGLE_K = 3  # word-k-gram width of the minhash shingles
-MINHASH_MIN_WORDS = 3  # token gate on the signature relation
-# ADVICE r11: _minhash_sigs' row-local array_min emits null mh columns
-# on an empty shingle array, and null signatures would collapse into one
-# shared band bucket of false-positive pairs. The gate >= the shingle
-# width guarantees every gated doc has >= 1 shingle; keep the coupling
-# explicit so a retune of either constant trips this instead of
-# silently minting a null-signature mega-bucket.
-assert MINHASH_MIN_WORDS >= MINHASH_SHINGLE_K
 SIM_BITS = 60  # simhash width: 15 md5 hex chars → fits signed int64 exactly
 SIM_BAND_BITS = 15  # 4 bands of 15 bits for simhash LSH
 SIM_HAMMING_MAX = 8  # near-dup threshold on 60-bit signatures
 SIM_MAX_BUCKET = 32  # SimHash band-bucket cap (d14's argument, 15-bit bands)
-
-
-def _tokens_barrier(d: DataFrame, min_words: int | None = None) -> DataFrame:
-    """doc_id + token array, with the regex split evaluated exactly once
-    per document.
-
-    The explode-of-one-element-array is a Generate node — a projection
-    barrier CollapseProject cannot cross — so downstream shingle lambdas
-    reference a bound array attribute instead of re-inlining the split
-    expression. Without the barrier, ``element_at(split(text), i+j)``
-    re-runs the regex once per element access inside ``transform`` (HOF
-    lambdas get no subexpression elimination): ~160 splits/doc, ~7 s at
-    sf0.1 vs ~1 s with the barrier.
-    """
-    out = ensure_min_partitions(d).select(
-        "doc_id", F.explode(F.array(F.split("text", r"[ \t\n\f\r\x0B]+"))).alias("toks")
-    )
-    if min_words is not None:
-        out = out.filter(F.size("toks") >= min_words)
-    return out
-
-
-def _shingles_of(toks, k: int = 3):
-    """DISTINCT word-k-gram shingle array from a pre-tokenized array
-    column (see _tokens_barrier). Deliberately unsorted: every consumer
-    is order-insensitive (explode→groupBy-min for minhash, sizes and
-    intersect-sizes for Jaccard), so a per-document O(g log g) sort on
-    the hottest path would buy nothing — array_distinct alone shrinks
-    the explode volume and pins d4's set sizes."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(k)]
-        ),
-    )
-    return F.array_distinct(grams)
-
-
-_SHINGLES_SQL = (
-    "list_sort(list_distinct(list_transform("
-    "range(1, len(regexp_split_to_array(text, '[ \\t\\n\\f\\r\\x0B]+')) - 1), "
-    "i -> regexp_split_to_array(text, '[ \\t\\n\\f\\r\\x0B]+')[i] || ' ' || "
-    "regexp_split_to_array(text, '[ \\t\\n\\f\\r\\x0B]+')[i+1] || ' ' || "
-    "regexp_split_to_array(text, '[ \\t\\n\\f\\r\\x0B]+')[i+2])))"
-)
 
 
 def _ordered_pairs(members, pair_of=None):
@@ -111,56 +67,14 @@ def _ordered_pairs(members, pair_of=None):
     )
 
 
-def _band_key_array():
-    """The LSH band-key array — BAND_ROWS adjacent minhash columns
-    concatenated per band. ONE definition for every consumer (here,
-    pipelines.p1/p3, streaming/neardup, streaming/intake): a BAND_ROWS
-    or N_HASHES change must re-band every member of the family in
-    lockstep, or their candidate sets silently diverge."""
-    return F.array(
-        *[
-            F.concat_ws("|", *[f"mh{BAND_ROWS * b + r}" for r in range(BAND_ROWS)])
-            for b in range(N_HASHES // BAND_ROWS)
-        ]
-    )
-
-
-def _band_key_expr():
-    """The exploded LSH band-key column (one row per band)."""
-    return F.explode(_band_key_array())
-
-
 def _minhash_sigs(docs: DataFrame) -> DataFrame:
-    """(doc_id, mh0..mh{{N_HASHES-1}}) — ONE definition of the MinHash
-    signature relation shared by the banding pipeline (d3/d14 via
-    :func:`_lsh_band_buckets`) and signature-space estimation (d19).
-    Tokenize barrier → shingle barrier → per-doc ``array_min`` over the
-    bound shingle array per seed (p1's ``_minhash_sig_spark``): the
-    whole signature is ROW-LOCAL, so the relation needs no Exchange at
-    all — the previous explode→groupBy form shuffled a doc-count-scale
-    (doc_id, 8×32-B hash) relation (~300 B/doc: ~300 GB of network at a
-    10^9-doc corpus) and measured 2× slower at sf0.1 (0.74 s → 0.37 s,
-    OPTIMIZATION_r11.md). min-over-md5 is associative and the shingle
-    set identical, so the signature bytes are unchanged (pair-set diff
-    asserted 0 at sf0.1 before the swap).
-
-    Empty-shingle invariant (ADVICE r11): this row-local form emits one
-    row per gated doc unconditionally, and ``array_min`` over an EMPTY
-    shingle array would yield null mh columns that _band_key_expr's
-    concat_ws would collapse into one shared false-positive band
-    bucket. Unreachable because the min_words gate below equals the
-    shingle width k (a doc passing the gate has >= 1 k-gram) — made
-    EXPLICIT by MINHASH_MIN_WORDS/MINHASH_SHINGLE_K and the module
-    assert next to them, so a future retune cannot silently decouple
-    them."""
-    tokd = _tokens_barrier(docs, min_words=MINHASH_MIN_WORDS)
-    shb = tokd.select(
-        "doc_id",
-        F.explode(
-            F.array(_shingles_of(F.col("toks"), k=MINHASH_SHINGLE_K))
-        ).alias("shb"),
-    )
-    return shb.select("doc_id", *_minhash_sig_spark(F.col("shb")))
+    """(doc_id, mh0..mh7) of every doc with MINHASH_MIN_WORDS tokens —
+    the signature relation of the banding pipeline (d3/d14 via
+    :func:`_lsh_band_buckets`) and of signature-space estimation
+    (d19). Row-local (kinesis_spark/minhash.py), so no Exchange: the
+    earlier explode→groupBy-min form shuffled ~300 B/doc and measured
+    2× slower at sf0.1 (0.74 s → 0.37 s, OPTIMIZATION_r11.md)."""
+    return signatures(_tokens_barrier(docs, min_words=MINHASH_MIN_WORDS))
 
 
 def _pairs_of(buckets: DataFrame) -> DataFrame:
@@ -179,21 +93,19 @@ def _lsh_band_buckets(
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """ONE definition of the MinHash({n})+LSH banding pipeline shared by
-    d3 (uncapped) and d14 (capped): tokenize barrier → shingle explode →
-    per-doc min-hash signature → band keys → per-bucket SORTED member
-    arrays with >= 2 members (and <= max_bucket when capped).
+    d3 (uncapped) and d14 (capped): row-local signatures → band keys →
+    per-bucket SORTED member arrays with >= 2 members (and <= max_bucket
+    when capped).
 
-    Plan shape (the reason this is grouped, not self-joined): explode
-    shingles, hash each once per seed, min-agg per doc — tokenization
-    runs once per document and the groupBy shuffles only (doc_id,
-    {n}x32-B hash) partial mins; a band self-join would run the whole
-    signature pipeline twice (plan audits count the scans). Grouping on
-    band_key shuffles the same key the join would and collects each
-    bucket's members for :func:`_ordered_pairs`.
+    Plan shape (the reason this is grouped, not self-joined): a band
+    self-join would run the whole signature pipeline twice (plan audits
+    count the scans). Grouping on band_key shuffles the same key the
+    join would and collects each bucket's members for
+    :func:`_ordered_pairs`.
     """
     if sigs is None:
         sigs = _minhash_sigs(docs)
-    bands = sigs.select("doc_id", _band_key_expr().alias("band_key"))
+    bands = sigs.select("doc_id", F.explode(band_key_array()).alias("band_key"))
     keep = F.size("ids") >= 2
     if max_bucket is not None:
         keep = keep & (F.size("ids") <= max_bucket)
@@ -260,49 +172,6 @@ def d2_content_hash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_sig_spark(shingles):
-    """MinHash via min-of-md5(seed || shingle) per seed — engine-portable."""
-    return [
-        F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{seed}#"), s)))
-        ).alias(f"mh{seed}")
-        for seed in range(N_HASHES)
-    ]
-
-
-def _minhash_sig_sql(seed: int) -> str:
-    return (
-        f"list_min(list_transform({_SHINGLES_SQL}, "
-        f"s -> md5('{seed}#' || s))) AS mh{seed}"
-    )
-
-
-# ONE definition of the oracle-side band unnest — generated from
-# BAND_ROWS/N_HASHES so the SQL banding can never drift from
-# _band_key_expr's Spark banding (consumers: the CTE below + the
-# p1/p3 pipeline oracles).
-_BAND_UNNEST_SQL = "unnest([{}]) AS band_key".format(
-    ", ".join(
-        " || '|' || ".join(f"mh{BAND_ROWS * b + r}" for r in range(BAND_ROWS))
-        for b in range(N_HASHES // BAND_ROWS)
-    )
-)
-
-# ONE definition of the oracle-side signature/banding/pair CTE chain —
-# d3/d9/d10/d13/d14 (and setops' s14) compose from these instead of five
-# spelled-out copies whose banding scheme could silently drift.
-_SIGS_BANDS_SQL = f"""sigs AS (
-  SELECT doc_id,
-         {", ".join(_minhash_sig_sql(s) for s in range(N_HASHES))}
-  FROM documents
-  WHERE len(regexp_split_to_array(text, '[ \\t\\n\\f\\r\\x0B]+')) >= 3
-),
-bands AS (
-  SELECT doc_id,
-         {_BAND_UNNEST_SQL}
-  FROM sigs
-)"""
-
 MAX_BUCKET = 4  # LSH bucket-size cap: bigger buckets are dropped wholesale
 
 # The CAPPED candidate CTE (d14's semantics): hot band keys are dropped
@@ -312,7 +181,7 @@ MAX_BUCKET = 4  # LSH bucket-size cap: bigger buckets are dropped wholesale
 # 31.9x wall for d10 at a 30x duplicate-heavy corpus, SCALE_r07_x30), and
 # d10's pair-list broadcast would hit the broadcast ceiling outright.
 _CAPPED_PAIRS_SQL = (
-    _SIGS_BANDS_SQL
+    sigs_bands_sql("documents", MIN_WORDS_SQL)
     + f""",
 kept AS (
   SELECT band_key FROM bands
@@ -1751,7 +1620,7 @@ _D21_CURVE_SQL = ", ".join(
 WITH documents50 AS (
   SELECT * FROM documents WHERE doc_id < {_D21_SUBSET}
 ),
-{_SIGS_BANDS_SQL.replace("FROM documents", "FROM documents50")},
+{sigs_bands_sql("documents50", MIN_WORDS_SQL)},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b

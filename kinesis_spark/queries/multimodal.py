@@ -170,7 +170,7 @@ def _frame_energy_df(media: DataFrame, frame_bytes: int = 256) -> DataFrame:
     frames = sample_frames(media, frame_bytes=frame_bytes, every_k=1)
     # Generate barrier: decode once per frame; without it the lambda's
     # expressions over decode(frame) re-decode per element (256x) —
-    # same pitfall as dedup._tokens_barrier. 4.2 s -> 1.6 s at sf0.1.
+    # same pitfall as minhash._tokens_barrier. 4.2 s -> 1.6 s at sf0.1.
     decoded = frames.select(
         "media_id", "modality", "frame_idx",
         F.explode(F.array(F.decode("frame", "UTF-8"))).alias("txt"),

@@ -23,19 +23,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_spark.io import ensure_min_partitions, load_table
-from kinesis_spark.queries import WS_RE, register
-from kinesis_spark.queries.dedup import (
-    _BAND_UNNEST_SQL,
-    _band_key_expr,
-    _minhash_sig_sql,
-    _minhash_sig_spark,
-    _shingles_of,
-    EX_WINDOW,
-    N_HASHES,
+from kinesis_spark.minhash import (
+    MINHASH_MIN_WORDS,
+    band_key_array,
+    signatures,
+    sigs_bands_sql,
 )
+from kinesis_spark.queries import WS_RE, register
+from kinesis_spark.queries.dedup import EX_WINDOW
 
 _KEEP_LANGS = ("en", "de", "fr", "es")
 _MIN_TOKENS = 10
+# the gate below is the MinHash token gate of every p-family signature
+assert _MIN_TOKENS >= MINHASH_MIN_WORDS
 _LANGS_SQL = ", ".join(f"'{x}'" for x in _KEEP_LANGS)
 
 # ONE definition of the language/length gate, Spark + oracle: the shared
@@ -63,18 +63,6 @@ def _gated_base(d: DataFrame) -> DataFrame:
     ).filter(F.col("lang").isin(*_KEEP_LANGS) & (F.size("toks") >= _MIN_TOKENS))
 
 
-def _band_keys_of(df: DataFrame, *carry: str) -> DataFrame:
-    """shingle barrier → minhash signature → exploded band keys. ONE
-    definition for p1 (carries the stats columns) and p3 (bare doc_id);
-    the banding itself is dedup._band_key_expr, shared with d3/d14 and
-    the streaming near-dup."""
-    shb = df.select(
-        "doc_id", *carry, F.explode(F.array(_shingles_of(F.col("toks")))).alias("shb")
-    )
-    sigs = shb.select("doc_id", *carry, *_minhash_sig_spark(F.col("shb")))
-    return sigs.select("doc_id", *carry, _band_key_expr().alias("band_key"))
-
-
 @register(
     "p1_llm_prep_pipeline",
     oracle=f"""
@@ -86,16 +74,7 @@ exact AS (
     FROM base GROUP BY sha256(text)
   ) k ON sha256(b.text) = k.h AND b.doc_id = k.keep
 ),
-sigs AS (
-  SELECT doc_id,
-         {", ".join(_minhash_sig_sql(s) for s in range(N_HASHES))}
-  FROM exact
-),
-bands AS (
-  SELECT doc_id,
-         {_BAND_UNNEST_SQL}
-  FROM sigs
-),
+{sigs_bands_sql("exact")},
 drops AS (
   SELECT DISTINCT b.doc_id
   FROM bands a JOIN bands b
@@ -128,10 +107,9 @@ def p1_llm_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _gated_base(d)
 
     # exact dedup: first doc_id per content hash (window, not agg+join).
-    # MinHash signatures are computed ROW-LOCALLY (shingle barrier + 8
-    # array_min columns) BEFORE the hash exchange, so the shuffle
-    # carries (ids, stats, h, 8x32-B hashes) instead of every
-    # survivor's full token array — at 100 TB the former form moved
+    # MinHash signatures are computed ROW-LOCALLY BEFORE the hash
+    # exchange, so the shuffle carries (ids, stats, h, 8x32-B hashes)
+    # instead of every survivor's full token array — at 100 TB the former form moved
     # ~corpus bytes through the exact-dedup exchange just to band the
     # winners afterwards (guide §8: decide with small rows). Dup losers
     # now compute signatures they don't use (rn > 1 rows are filtered),
@@ -139,27 +117,25 @@ def p1_llm_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 alternating A/B 1.93 -> 1.09 s steady (−27..−43% across 3
     # blocks), bit-identical output (OPTIMIZATION_r12.md).
     carry = ["lang", "source", "n_toks", "n_chars"]
-    pre = base.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.size("toks").cast("bigint").alias("n_toks"),
-        F.length("text").cast("bigint").alias("n_chars"),
-        F.sha2("text", 256).alias("h"),
-        # explode-of-one-element-array = the shingle barrier (see
-        # dedup._tokens_barrier): the 8 per-seed lambdas below bind one
-        # computed array instead of re-running the shingle transform
-        F.explode(F.array(_shingles_of(F.col("toks")))).alias("shb"),
-    )
-    sigs_rel = pre.select(
-        "doc_id", *carry, "h", *_minhash_sig_spark(F.col("shb"))
+    sigs_rel = signatures(
+        base,
+        keep=[
+            "doc_id",
+            "lang",
+            "source",
+            F.size("toks").cast("bigint").alias("n_toks"),
+            F.length("text").cast("bigint").alias("n_chars"),
+            F.sha2("text", 256).alias("h"),
+        ],
     )
     wh = Window.partitionBy("h").orderBy("doc_id")
     exact = sigs_rel.withColumn("rn", F.row_number().over(wh)).filter(
         F.col("rn") == 1
     )
 
-    bands = exact.select("doc_id", *carry, _band_key_expr().alias("band_key"))
+    bands = exact.select(
+        "doc_id", *carry, F.explode(band_key_array()).alias("band_key")
+    )
     # near-dup drop: a doc survives iff it is the minimal member of
     # EVERY bucket it lands in (same keep-lowest-id contract as the
     # oracle's a.doc_id < b.doc_id drop set)
@@ -220,16 +196,7 @@ exact AS (
     FROM gated GROUP BY sha256(text)
   ) k ON sha256(g.text) = k.h AND g.doc_id = k.keep
 ),
-sigs AS (
-  SELECT doc_id,
-         {", ".join(_minhash_sig_sql(s) for s in range(N_HASHES))}
-  FROM exact
-),
-bands AS (
-  SELECT doc_id,
-         {_BAND_UNNEST_SQL}
-  FROM sigs
-),
+{sigs_bands_sql("exact")},
 drops AS (
   SELECT DISTINCT b.doc_id
   FROM bands a JOIN bands b
@@ -314,46 +281,36 @@ FROM stages
         # never collide with the "ng-"/"x-" prefixes) and contribute
         # nothing to real buckets, so the verdicts are identical to the
         # former three-branch form while the corpus is scanned once.
-        from kinesis_spark.queries.dedup import (
-            _band_key_expr,
-            _minhash_sig_spark,
-            _shingles_of,
-        )
-
         gate_ok = F.col("lang_ok") & F.col("len_ok") & F.col("q_ok")
-        # MinHash signatures ROW-LOCAL before the hash exchange (p1's
-        # r12 change, guide §8): the shuffle carries 8x32-B hashes
-        # instead of every gate survivor's token array. Exact-dup
-        # losers compute signatures whose band keys are later replaced
-        # by their "x-" singleton key — exactly as the former form
-        # replaced the keys it computed from their placeholder sigs —
-        # so the output is identical while the exchange payload drops
-        # from ~corpus bytes to ~330 B/doc. sf0.1 alternating A/B:
-        # 3.57 -> 2.68 s steady (−20..−25% across 3 blocks).
-        shb = F.when(gate_ok, _shingles_of(F.col("toks"))).otherwise(
-            F.array(F.lit(""))
-        )
-        hashed = flags.select(
-            "doc_id", "n_toks", "lang_ok", "len_ok", "q_ok",
-            F.when(gate_ok, F.sha2("text", 256))
-            .otherwise(F.concat(F.lit("ng-"), F.col("doc_id")))
-            .alias("h"),
-            *_minhash_sig_spark(shb),
-        )
+        # MinHash band keys ROW-LOCAL before the hash exchange (p1's
+        # r12 change, guide §8): the shuffle carries 4 band keys
+        # instead of every gate survivor's token array, ~330 B/doc
+        # instead of ~corpus bytes. sf0.1 alternating A/B: 3.57 ->
+        # 2.68 s steady (−20..−25% across 3 blocks). A gated-out doc is
+        # unsigned and its key array null.
+        flag_cols = ["doc_id", "n_toks", "lang_ok", "len_ok", "q_ok"]
+        hashed = signatures(
+            flags,
+            keep=[
+                *flag_cols,
+                F.when(gate_ok, F.sha2("text", 256))
+                .otherwise(F.concat(F.lit("ng-"), F.col("doc_id")))
+                .alias("h"),
+            ],
+            gate=gate_ok,
+        ).select(*flag_cols, "h", band_key_array(gated=True).alias("bk"))
         wh = Window.partitionBy("h").orderBy("doc_id")
         ranked = hashed.withColumn("rn", F.row_number().over(wh))
-        # eligibility gates the BAND KEY, not the signature: every
-        # non-entrant (gated-out doc OR exact-dup loser) gets its
-        # computed band keys replaced by a per-doc-unique "x-" key, so
-        # it forms singleton band partitions and contributes nothing to
-        # real buckets — identical verdicts to the former form, which
-        # gated the shingle build instead (that required toks to
-        # survive the hash exchange)
+        # every non-entrant (gated-out doc OR exact-dup loser) gets its
+        # band keys replaced by a per-doc-unique "x-" key, so it forms
+        # singleton band partitions and contributes nothing to real
+        # buckets; explode_outer keeps the gated-out doc's null keys as
+        # one row, so it still reaches the funnel
         eligible = gate_ok & (F.col("rn") == 1)  # the band-stage entrants
-        carry = ["doc_id", "n_toks", "lang_ok", "len_ok", "q_ok", "rn"]
+        carry = [*flag_cols, "rn"]
         banded = ranked.select(
             *carry,
-            _band_key_expr().alias("band_key"),
+            F.explode_outer("bk").alias("band_key"),
         ).withColumn(
             # `eligible` resolves by name post-explode (its constituent
             # flags all ride `carry`)
@@ -525,24 +482,8 @@ flagged AS (
          (b.rn > 1 OR c.h IS NOT NULL) AS exact_dup
   FROM batch b LEFT JOIN ch c ON b.h = c.h
 ),
-rsigs AS (
-  SELECT doc_id,
-         {", ".join(_minhash_sig_sql(s) for s in range(N_HASHES))}
-  FROM flagged WHERE NOT exact_dup
-),
-csigs AS (
-  SELECT doc_id,
-         {", ".join(_minhash_sig_sql(s) for s in range(N_HASHES))}
-  FROM corpus
-),
-rbands AS (
-  SELECT doc_id, {_BAND_UNNEST_SQL}
-  FROM rsigs
-),
-cbands AS (
-  SELECT {_BAND_UNNEST_SQL}
-  FROM csigs
-),
+{sigs_bands_sql("flagged", "NOT exact_dup", prefix="r")},
+{sigs_bands_sql("corpus", prefix="c")},
 near AS (
   SELECT DISTINCT r.doc_id
   FROM rbands r JOIN (SELECT DISTINCT band_key FROM cbands) c
@@ -643,9 +584,14 @@ def p3_incremental_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     rem = flagged.filter(~F.col("exact_dup"))
-    cband_keys = _band_keys_of(corpus).select("band_key").distinct()
+    cband_keys = (
+        signatures(corpus)
+        .select(F.explode(band_key_array()).alias("band_key"))
+        .distinct()
+    )
     near = (
-        _band_keys_of(rem)
+        signatures(rem)
+        .select("doc_id", F.explode(band_key_array()).alias("band_key"))
         .join(cband_keys, "band_key", "left_semi")
         .select("doc_id")
         .distinct()

@@ -499,7 +499,7 @@ def sim7_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-only single scan, no shuffle; the expensive per-row
     max|x| is materialized once behind a Generate barrier (the scale
     expression is referenced inside per-element lambdas, and HOF lambdas
-    get no CSE — see dedup._tokens_barrier)."""
+    get no CSE — see minhash._tokens_barrier)."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )

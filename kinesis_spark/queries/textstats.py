@@ -42,7 +42,7 @@ def t1_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The token array is materialized once per document behind a Generate
     barrier (explode-of-one-element-array, same pattern as
-    dedup._tokens_barrier): ``toks`` is referenced by three expressions,
+    minhash._tokens_barrier): ``toks`` is referenced by three expressions,
     and HOF lambdas get no common-subexpression elimination, so inlining
     the split would re-run the regex 3x per doc."""
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
@@ -98,7 +98,7 @@ def t2_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     length prior (the usual pre-training corpus filters)."""
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     # Generate barrier: tokenize once per doc (toks is referenced 3x below;
-    # see t1_token_stats / dedup._tokens_barrier).
+    # see t1_token_stats / minhash._tokens_barrier).
     b = d.select(
         "doc_id",
         "lang",
@@ -171,7 +171,7 @@ def t3_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Generate barrier: tokenize once per doc. The four marker_count HOF
     # lambdas below each reference toks; without the barrier the regex
     # split re-runs 4x per document (no CSE across HOF lambdas) — measured
-    # 6.5 s -> ~1.5 s at sf0.1 (see dedup._tokens_barrier).
+    # 6.5 s -> ~1.5 s at sf0.1 (see minhash._tokens_barrier).
     b = d.select(
         "doc_id", "lang", F.explode(F.array(F.split("text", WS_RE))).alias("toks")
     )

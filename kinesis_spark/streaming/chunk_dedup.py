@@ -75,7 +75,7 @@ class ChunkDedupSink(BloomDedupSink):
 
     @scope()
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from kinesis_spark.prep_index import chunk_dedup_rewrite
+        from kinesis_spark.prep_index import chunk_dedup_rewrite, new_keys
         from kinesis_spark.queries.textstats import chunk_relation
 
         token = self.run_token  # resolve ONCE per batch (see bloom sink)
@@ -96,20 +96,13 @@ class ChunkDedupSink(BloomDedupSink):
         report.write.mode("overwrite").parquet(out_sub)
 
         # surviving hashes = the batch's distinct chunk hashes not
-        # already corpus-owned (the kept first occurrences admit them);
-        # append_chunk_index's confirm orientation: store scanned once
-        # single-column, batch keys broadcast
+        # already corpus-owned (the kept first occurrences admit them)
         batch_keys = (
             chunk_relation(batch.select("doc_id", "text"), text=False)
             .select("chunk_hash")
             .distinct()
         )
-        matched = (
-            store.join(F.broadcast(batch_keys), "chunk_hash", "left_semi")
-            .select("chunk_hash")
-            .distinct()
-        )
-        fresh = batch_keys.join(F.broadcast(matched), "chunk_hash", "left_anti")
+        fresh = new_keys(batch_keys, store, "chunk_hash")
         chunk_sub = os.path.join(self._chunk_dir, f"ingest_batch={key}")
         fresh.write.mode("overwrite").parquet(chunk_sub)
         _write_marker(self.state_dir, token, batch_id)

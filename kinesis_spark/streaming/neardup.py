@@ -14,11 +14,8 @@ training-data intake needs (the batch join would re-scan history every
 time).
 
 Scale notes:
-- The signature pipeline is projection + Generate only. Two explode-of-
-  one-element-array barriers (tokens, then shingles) keep CollapseProject
-  from re-inlining the tokenize/shingle work into each of the 8 minhash
-  expressions (the naive sibling-array form re-runs it 8x; measured
-  ~100 s vs ~2 s on the batch twin, dedup.py:171).
+- The signature pipeline is kinesis_spark/minhash.py's, projection +
+  Generate only.
 - State is one long per bucket (the canonical doc_id), keyed by the
   64-hex-char band key: bounded by the number of distinct buckets, not
   by corpus size, and each bucket's state is touched only when a new
@@ -39,14 +36,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kinesis_spark.queries.dedup import (
+from kinesis_spark.minhash import (
+    MH_COLS,
     MINHASH_MIN_WORDS,
-    MINHASH_SHINGLE_K,
-    N_HASHES,
-    _band_key_array,
-    _minhash_sig_spark,
-    _shingles_of,
+    SHINGLES,
+    band_key_array,
+    signatures,
 )
+from kinesis_spark.queries import WS_RE
 
 CANDIDATE_SCHEMA = T.StructType(
     [
@@ -62,25 +59,15 @@ _STATE_SCHEMA = T.StructType([T.StructField("canon", T.LongType())])
 def with_band_keys(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """``docs`` plus ``__bk``: the array of each doc's MinHash band keys,
     null for a doc under MINHASH_MIN_WORDS tokens. Projection + Generate
-    only, so it works identically on batch and streaming DataFrames:
-    array_min over the hashed shingle array replaces the batch twin's
-    explode + groupBy-min, and the two explode-of-one-element-array
-    barriers evaluate the split and the shingle array once per document
-    (dedup._tokens_barrier)."""
-    toks = F.col("__toks")
+    only, so it works identically on batch and streaming DataFrames."""
+    tokd = docs.withColumn("__toks", F.explode(F.array(F.split(text_col, WS_RE))))
     # the gate guards the shingle sequence too: under k tokens it would
     # index element 0
-    keyed = F.size(toks) >= MINHASH_MIN_WORDS
-    sh = docs.withColumn(
-        "__toks", F.explode(F.array(F.split(text_col, r"[ \t\n\f\r\x0B]+")))
-    ).withColumn(
-        "__sh",
-        F.explode(F.array(F.when(keyed, _shingles_of(toks, k=MINHASH_SHINGLE_K)))),
-    )
+    gate = F.size("__toks") >= MINHASH_MIN_WORDS
     return (
-        sh.select(*docs.columns, "__sh", *_minhash_sig_spark(F.col("__sh")))
-        .withColumn("__bk", F.when(F.col("__sh").isNotNull(), _band_key_array()))
-        .drop("__sh", *[f"mh{i}" for i in range(N_HASHES)])
+        signatures(tokd, "__toks", keep=docs.columns, gate=gate)
+        .withColumn("__bk", band_key_array(gated=True))
+        .drop(SHINGLES, *MH_COLS)
     )
 
 

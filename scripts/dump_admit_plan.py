@@ -3,7 +3,9 @@
 plans/r{ROUND}/intake_admit_<suffix>.txt, twice: against populated hash
 and band indexes, and with no index yet (``_empty``). AQE is off, as in
 a streaming query's foreachBatch. DATA_DIR holds the fixture tables
-(the committed intake_admit plans used the sf0.01 fixture). Usage:
+(the committed intake_admit plans used the sf0.01 fixture). Counters are
+renumbered as in dump_plans.py and the scratch index directory reads
+``$WORK``, so two dumps of the same plan are byte-identical. Usage:
     python scripts/dump_admit_plan.py SUFFIX DATA_DIR
 """
 from __future__ import annotations
@@ -23,6 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from kinesis_spark.io import load_table  # noqa: E402
 from kinesis_spark.session import get_spark  # noqa: E402
 from kinesis_spark.streaming.intake import PrepIntakeSink  # noqa: E402
+from dump_plans import normalise  # noqa: E402
 
 
 def main() -> None:
@@ -51,7 +54,7 @@ def main() -> None:
                 sink._admit(batch).explain()
             path = os.path.join(out_dir, f"{name}_{suffix}.txt")
             with open(path, "w") as fh:
-                fh.write(buf.getvalue())
+                fh.write(normalise(buf.getvalue().replace(work, "$WORK")))
             print(f"wrote {path}", flush=True)
 
         dump("intake_admit_empty", docs.filter(F.col("doc_id") < 200))

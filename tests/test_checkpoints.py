@@ -14,7 +14,7 @@ import os
 
 import pytest
 
-from kinesis_spark.pins import pin, pin_lazy
+from kinesis_spark.pins import pin, pin_lazy, release_shared_pins
 
 
 @contextlib.contextmanager
@@ -55,6 +55,8 @@ def test_pin_goes_reliable_with_dir(spark, tmp_path):
         lazy = spark.range(7).transform(pin_lazy)
         assert lazy.count() == 7  # materializes on first action
         assert _ckpt_rdd_count(d) == 2
+        release_shared_pins()
+        assert _ckpt_rdd_count(d) == 0  # the release deletes the files too
 
 
 def test_g1_pagerank_survivable_checkpoints(spark, sf_dir, tmp_path):

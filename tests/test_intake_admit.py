@@ -10,7 +10,7 @@ import contextlib
 import hashlib
 import io
 
-from kinesis_spark.queries.dedup import N_HASHES
+from kinesis_spark.minhash import N_HASHES
 from kinesis_spark.streaming.intake import PrepIntakeSink
 from kinesis_spark.streaming.neardup import band_keys
 

@@ -167,3 +167,29 @@ def test_gram_index_append_makes_next_batch_see_prior_batches(spark, tmp_path):
     r2 = {r.doc_id: r for r in incremental_span_excision(spark, batch2, idx).collect()}
     assert (r2[20].n_cut_starts, r2[20].n_removed) == (1, 4)
     assert r2[20].clean_md5 == _md5("X Z")
+
+
+def test_gram_index_append_frees_its_pin_when_the_write_fails(
+    spark, tmp_path, monkeypatch
+):
+    """The append pins its new-key relation for count + write; a write
+    that raises must not leave that pin stored."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from kinesis_spark.prep_index import append_gram_index, build_gram_index
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    idx = str(tmp_path / "gramidx")
+    build_gram_index(spark, docs([(1, "A B C D E F")]), idx)
+    stored = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = len(stored())
+
+    def fail(self, *args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail)
+    with pytest.raises(OSError, match="disk full"):
+        append_gram_index(spark, docs([(10, "K L M N O P")]), idx)
+    assert len(stored()) == before

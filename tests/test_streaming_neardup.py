@@ -108,9 +108,17 @@ def test_cross_batch_bucket_memory(spark, docs_two_batches):
 
 def test_band_keys_match_batch_d3_signatures(spark, sf_dir):
     """The projection-only signature pipeline equals the batch twin's
-    explode + groupBy-min (d3) bucket for bucket."""
+    explode + groupBy-min (d3) bucket for bucket, and its per-doc band-key
+    sets equal the DuckDB ``bands`` CTE of the same kernel."""
     from kinesis_spark.io import load_table
-    from kinesis_spark.queries.dedup import N_HASHES, _shingles_of, _tokens_barrier
+    from kinesis_spark.minhash import (
+        MIN_WORDS_SQL,
+        N_HASHES,
+        _shingles_of,
+        _tokens_barrier,
+        sigs_bands_sql,
+    )
+    from tests.oracle_utils import run_oracle
 
     docs = load_table(spark, sf_dir, "documents")
     got = band_keys(docs).toPandas()
@@ -135,3 +143,17 @@ def test_band_keys_match_batch_d3_signatures(spark, sf_dir):
     ).toPandas()
     key = lambda df: sorted(map(tuple, df[["doc_id", "band_key"]].values.tolist()))  # noqa: E731
     assert key(got) == key(want)
+
+    def per_doc(df):
+        out: dict[int, set[str]] = {}
+        for doc, bk in df[["doc_id", "band_key"]].values.tolist():
+            out.setdefault(int(doc), set()).add(bk)
+        return out
+
+    duck = run_oracle(
+        f"WITH {sigs_bands_sql('documents', MIN_WORDS_SQL)} "
+        "SELECT doc_id, band_key FROM bands",
+        sf_dir,
+    )
+    assert len(duck) > 0
+    assert per_doc(got) == per_doc(duck)
