@@ -11,8 +11,8 @@ failed puts raise instead of claiming success, drops are surfaced on
 stderr with counts, and the dead 5 MiB request cap is enforced.
 
 ``--consume`` is the read side the reference leaves to its users: walk
-every shard with the GetShardIterator/GetRecords consumer
-(ingest/consumer.py), keep this partition key's records, and write
+every shard with ``ingest.consumer.iter_shard`` (GetShardIterator /
+GetRecords), keep this partition key's records, and write
 their Data to stdout in sequence order — the io.Copy inverse.
 
 The AWS client is injectable (``--fake-sink PATH`` spools full records
@@ -49,7 +49,8 @@ def _consume(args, stdout) -> int:
     span parent then child, and sequence numbers are monotone across the
     cutover; closed shards end with a null NextShardIterator and the
     walk moves on)."""
-    from kinesis_spark.ingest.consumer import RetryingConsumer
+    from kinesis_spark.ingest.consumer import RetryingConsumer, iter_shard
+    from kinesis_spark.ingest.leases import seq_key
 
     if args.fake_sink:
         from kinesis_spark.ingest.consumer import SpoolConsumerClient
@@ -59,31 +60,21 @@ def _consume(args, stdout) -> int:
         try:
             from kinesis_spark.ingest.consumer import make_boto3_consumer
 
-            # retry-wrapped: the tight drain loop below WILL hit the
+            # retry-wrapped: the tight shard walk below WILL hit the
             # 5 reads/s/shard Kinesis cap on a real backlog; throttles
             # must back off, not crash the CLI mid-stream
             consumer = RetryingConsumer(make_boto3_consumer(args.region))
         except NotImplementedError as exc:
             raise SystemExit(str(exc)) from exc
-    recs: list[tuple[str, bytes]] = []
-    for shard in consumer.list_shards(args.stream):
-        token = consumer.get_shard_iterator(args.stream, shard)
-        while token:
-            resp = consumer.get_records(token)
-            for r in resp["Records"]:
-                if r["PartitionKey"] == args.partition_key:
-                    recs.append((r["SequenceNumber"], r["Data"]))
-            if not resp["Records"] and resp.get("MillisBehindLatest", 0) == 0:
-                break
-            token = resp.get("NextShardIterator")
-    # real Kinesis sequence numbers are variable-length decimal strings,
-    # where lexicographic order lies ('1000…' < '999…'); the spool's are
-    # fixed-width with separators. Compare numerically when numeric.
-    def _seq_key(sd):
-        seq = sd[0]
-        return (0, int(seq), "") if seq.isdigit() else (1, 0, seq)
-
-    for _, data in sorted(recs, key=_seq_key):
+    recs = [
+        (r["SequenceNumber"], r["Data"])
+        for shard in consumer.list_shards(args.stream)
+        for r in iter_shard(consumer, args.stream, shard)
+        if r["PartitionKey"] == args.partition_key
+    ]
+    # numeric order for real Kinesis' variable-length decimal sequences,
+    # where lexicographic order lies ('1000…' < '999…')
+    for _, data in sorted(recs, key=lambda sd: seq_key(sd[0])):
         stdout.write(data)
     return 0
 

@@ -16,12 +16,19 @@ fake (tests, local runs) and boto3 (production) are interchangeable:
   half-written put call is never observed.
 - :class:`Boto3ConsumerClient` — the real-AWS adapter, import-gated like
   the writer's (ingest/aws.py:37).
+- :func:`iter_shard` — the one shard walk (iterator type, the
+  ``NextShardIterator`` chain, the caught-up-at-tip stop and an optional
+  end sequence). The CLI's ``--consume`` calls it directly;
+  :func:`read_stream_batch` and the streaming source's executor-side
+  ``read`` call it through :func:`shard_rows`.
 - :func:`read_stream_batch` — the distributed batch read: ONE Spark task
-  per shard (the Kinesis unit of parallelism), each running the
-  iterator loop executor-side; the driver only sees the shard list.
+  per shard (the Kinesis unit of parallelism), each running
+  :func:`iter_shard` executor-side; the driver only sees the shard list.
 
-The streaming half lives in ``kinesis_spark/streaming/kinesis_source.py``
-(a Python Data Source whose offsets are per-shard sequence numbers).
+``SpoolConsumerClient._iter_spool_records`` is the only parser of the
+spool format; the Spark-side spool reads go through the
+``kinesis_consumer`` source (``kinesis_spark/streaming/kinesis_source.py``,
+a Python Data Source whose offsets are per-shard sequence numbers).
 """
 
 from __future__ import annotations
@@ -341,9 +348,9 @@ class ThrottledError(RuntimeError):
 class RetryingConsumer:
     """Decorator adding bounded exponential backoff to ``get_records`` —
     the consumer twin of the writer's ErrorCode retry loop
-    (writer.py:119). Kinesis caps each shard at 5 reads/2 MB per
+    (``Writer._put_with_retry``). Kinesis caps each shard at 5 reads/2 MB per
     second, so a fan-in of readers WILL see throttles; retrying at the
-    client seam keeps the Spark tasks' iterator loops oblivious.
+    client seam keeps :func:`iter_shard` oblivious.
 
     ``sleeper`` is injectable (tests pass a recorder; production leaves
     ``time.sleep``) and the backoff is deterministic:
@@ -434,6 +441,50 @@ def make_boto3_consumer(region_name: str | None = None, **kwargs) -> Boto3Consum
     )
 
 
+def iter_shard(
+    client: ShardIteratorClient,
+    stream_name: str,
+    shard_id: str,
+    after: str = "",
+    through: str | None = None,
+    limit: int = 10000,
+):
+    """The one GetShardIterator → GetRecords walk: yield one shard's
+    records in sequence order, starting after ``after`` (``""`` =
+    TRIM_HORIZON) and stopping at the first of:
+
+    - a null ``NextShardIterator`` (SHARD_END of a closed shard);
+    - an empty page with ``MillisBehindLatest == 0`` (caught up to the
+      tip of an open shard). An empty page while still BEHIND is routine
+      on real Kinesis and keeps iterating;
+    - a record past ``through`` (compared as strings, which is
+      chronological for the spool's fixed-width sequence numbers): the
+      streaming source's end-of-micro-batch bound, so a replay between
+      two offsets reads exactly the same records.
+    """
+    if after:
+        token = client.get_shard_iterator(
+            stream_name, shard_id, "AFTER_SEQUENCE_NUMBER", after
+        )
+    else:
+        token = client.get_shard_iterator(stream_name, shard_id, "TRIM_HORIZON")
+    while token:
+        resp = client.get_records(token, limit)
+        for r in resp["Records"]:
+            if through is not None and r["SequenceNumber"] > through:
+                return
+            yield r
+        if not resp["Records"] and resp.get("MillisBehindLatest", 0) == 0:
+            return
+        token = resp.get("NextShardIterator")
+
+
+def shard_rows(client: ShardIteratorClient, stream_name: str, shard_id: str, **walk):
+    """:func:`iter_shard` as ``CONSUMER_SCHEMA`` rows (both Spark readers)."""
+    for r in iter_shard(client, stream_name, shard_id, **walk):
+        yield (shard_id, r["PartitionKey"], r["SequenceNumber"], bytearray(r["Data"]))
+
+
 def read_stream_batch(
     spark: SparkSession,
     client_factory: Callable[[], ShardIteratorClient],
@@ -443,7 +494,7 @@ def read_stream_batch(
 ) -> DataFrame:
     """Distributed batch read of a whole stream: one Spark task per shard
     (the Kinesis parallelism unit), each constructing its own client from
-    the factory and running the GetRecords iterator loop executor-side.
+    the factory and running :func:`iter_shard` executor-side.
     The driver handles only the shard id list; record data never touches
     it. Returns ``(shard_id, pk, seq, data binary)`` — feed to
     ``reassemble_records`` (streaming/spool.py) for the io.Copy analog.
@@ -462,19 +513,7 @@ def read_stream_batch(
     def read_shard(shard_ids):
         client = client_factory()
         for shard_id in shard_ids:
-            token = client.get_shard_iterator(stream_name, shard_id)
-            while token:
-                resp = client.get_records(token, limit_per_call)
-                for r in resp["Records"]:
-                    yield (
-                        shard_id,
-                        r["PartitionKey"],
-                        r["SequenceNumber"],
-                        bytearray(r["Data"]),
-                    )
-                if not resp["Records"] and resp.get("MillisBehindLatest", 0) == 0:
-                    break  # caught up to the tip of an open shard
-                token = resp.get("NextShardIterator")
+            yield from shard_rows(client, stream_name, shard_id, limit=limit_per_call)
 
     rdd = spark.sparkContext.parallelize(shards, len(shards)).mapPartitions(
         read_shard

@@ -36,15 +36,18 @@ Design (KCL-lite, filesystem-backed, epoch-named lease files):
 - Superseded epoch files are garbage, not state (readers take the max);
   the winning claimant sweeps them after its exclusive create.
 
-Sequence-number ordering: checkpoints compare via ``(len(seq), seq)``,
-which orders unsigned decimal strings numerically whether or not they
-are zero-padded — the spool's fixed-width sequences and real Kinesis'
-variable-length numeric sequences both sort correctly ('9' < '10').
+Sequence-number ordering: :func:`seq_key` is the engine's one order
+rule for sequence numbers (checkpoints here, the CLI's ``--consume``
+sort, the streaming source's lag floors). It compares via
+``(len(seq), seq)``, which orders unsigned decimal strings numerically
+whether or not they are zero-padded — the spool's fixed-width
+sequences and real Kinesis' variable-length numeric sequences both sort
+correctly ('9' < '10').
 
 ``partition_shards`` is the consumer-facing entry: give it the shard
 list and it returns the subset this consumer now holds leases for —
-feed that to ``read_stream_batch``'s shard loop and two consumers
-split the stream disjointly (tested in tests/test_leases.py).
+pass the lease table to ``read_stream_batch(leases=...)`` and two
+consumers split the stream disjointly (tested in tests/test_leases.py).
 """
 
 from __future__ import annotations
@@ -55,7 +58,7 @@ import time
 import uuid
 
 
-def _seq_key(seq: str) -> tuple[int, str]:
+def seq_key(seq: str) -> tuple[int, str]:
     """Monotonicity key for sequence-number strings: numeric order for
     unsigned decimal strings of any width ('9' < '10' < '0012').
     Leading zeros are stripped first so MIXED padding can't regress a
@@ -252,7 +255,7 @@ class ShardLeases:
         cur, path = self._resolve(stream, shard_id)
         if cur is None or cur["owner"] != self.owner:
             return False
-        if _seq_key(seq) <= _seq_key(cur.get("ckpt", "")):
+        if seq_key(seq) <= seq_key(cur.get("ckpt", "")):
             # monotonic: never regress a checkpoint. Still verify — the
             # caller is about to trust this ownership downstream.
             return self._verify_after_write(stream, shard_id, path)

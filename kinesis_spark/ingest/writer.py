@@ -16,12 +16,16 @@ The client seam matches the reference's ``kinesisClient`` duck type
 (kinesis/kinesis.go:171-173): anything with
 ``put_records(stream_name, records) -> list[dict]`` where each response
 entry may carry ``ErrorCode``.
+
+This is the engine's only PutRecords loop: the CLI chain calls
+``Writer.write`` per flushed buffer, and the streaming sink
+(streaming/ingest.py) drives one ``Writer.put`` per partition task.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Protocol
+from typing import Iterable, Protocol
 
 from kinesis_spark.ingest.chunker import chunk_bytes
 from kinesis_spark.ingest.limits import (
@@ -90,6 +94,12 @@ class Writer:
         # chunkSize = recordSizeLimit - len(partitionKey)
         # (kinesis/kinesis.go:201-205)
         self.chunk_size = record_size_limit - key_len
+        # delivery counters, summed by the streaming sink's accumulators;
+        # bytes are payload bytes (the partition key is not counted)
+        self.put_calls = 0
+        self.records_put = 0
+        self.bytes_put = 0
+        self.records_retried = 0
 
     def write(self, payload: bytes) -> int:
         """Chunk, batch, and put ``payload``; returns bytes written.
@@ -99,30 +109,29 @@ class Writer:
         """
         if not payload:
             return 0  # explicit choice: no empty records (SURVEY.md §4.6)
-        records = [
+        self.put(
             Record(self.partition_key, c) for c in chunk_bytes(payload, self.chunk_size)
-        ]
-        for batch in self._batches(records):
-            self._put_with_retry(batch)
+        )
         return len(payload)
 
-    def _batches(self, records: list[Record]) -> list[list[Record]]:
-        """Greedy packing under BOTH the record-count and request-size caps."""
-        batches: list[list[Record]] = []
-        cur: list[Record] = []
-        cur_size = 0
+    def put(self, records: Iterable[Record]) -> None:
+        """Greedy packing under BOTH the record-count and request-size
+        caps, one PutRecords call (with retries) per full batch. Lazy:
+        ``records`` may be any iterable (the streaming sink feeds a
+        partition's row iterator) and is never materialized whole."""
+        batch: list[Record] = []
+        batch_size = 0
         for r in records:
-            if cur and (
-                len(cur) >= self.put_records_limit
-                or cur_size + r.size > self.put_records_size_limit
+            if batch and (
+                len(batch) >= self.put_records_limit
+                or batch_size + r.size > self.put_records_size_limit
             ):
-                batches.append(cur)
-                cur, cur_size = [], 0
-            cur.append(r)
-            cur_size += r.size
-        if cur:
-            batches.append(cur)
-        return batches
+                self._put_with_retry(batch)
+                batch, batch_size = [], 0
+            batch.append(r)
+            batch_size += r.size
+        if batch:
+            self._put_with_retry(batch)
 
     def _put_with_retry(self, batch: list[Record]) -> None:
         pending = batch
@@ -137,6 +146,7 @@ class Writer:
             responses = list(
                 self.client.put_records(self.stream_name, pending) or []
             )
+            self.put_calls += 1
             # positional results are the contract; records with NO
             # response entry have no delivery evidence — retry, never
             # silently count the zip-truncated tail as delivered
@@ -149,8 +159,13 @@ class Writer:
                 for rec, resp in zip(pending, responses)
                 if isinstance(resp, dict) and resp.get("ErrorCode")
             ]
+            self.records_put += len(pending) - len(failed)
+            self.bytes_put += sum(len(r.data) for r in pending) - sum(
+                len(r.data) for r in failed
+            )
             if not failed:
                 return
+            self.records_retried += len(failed)
             pending = failed
         raise PutRecordsError(
             f"{len(pending)} records still failing after "

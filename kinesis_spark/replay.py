@@ -6,12 +6,14 @@ re-driving a downstream pipeline after a bug fix.
 The reference's producer surface is bytes-from-stdin (main.go:32-35);
 this is its table-shaped sibling: each ROW serializes to one
 newline-terminated JSON record (or any caller-supplied payload
-expression), and the existing ingest query does everything downstream —
-chunking to the record-size limit, batch-by-500, the 5 MiB request cap,
-ErrorCode retries, optional per-shard throttle, and drop accounting
-(kinesis_spark/streaming/ingest.py). Nothing is reimplemented; the
-replay is ``start_ingest_query`` over a bounded file stream drained with
-``availableNow``.
+expression), and the existing ingest query does everything downstream:
+chunking to the record-size limit and drop accounting in
+kinesis_spark/streaming/ingest.py, then, per task, the CLI's own
+``ingest.writer.Writer.put`` for batch-by-500, the 5 MiB request cap,
+ErrorCode retries with backoff and the optional per-shard throttle.
+Nothing is reimplemented; the replay is ``start_ingest_query`` over a
+bounded file stream drained with ``availableNow``, and the records it
+puts read back through the ``kinesis_consumer`` source.
 
 Ordering: with the default parallel read, rows are put in per-task file
 order — the same contract as the streaming sink (per-partition packing;

@@ -2,8 +2,10 @@
 
 Design for scale: all row transforms (chunking, key tagging) are DataFrame
 expressions executed by the JVM; Python only runs at the sink boundary
-(one client per partition per micro-batch, like one boto3 client per task).
-Records never pass through the driver.
+(one client per partition per micro-batch, like one boto3 client per task),
+where each task drives the CLI's own ``ingest.writer.Writer.put`` — the
+foreachBatch sink is the existing writer run once per micro-batch, not a
+second PutRecords loop. Records never pass through the driver.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from kinesis_spark.ingest.limits import (
     PUT_RECORDS_SIZE_LIMIT,
     RECORD_SIZE_LIMIT,
 )
+from kinesis_spark.ingest.writer import Record, Writer
 
 
 def build_rate_source(
@@ -167,11 +170,6 @@ def start_ingest_query(
     if chunk_size <= 0:
         raise ValueError("record_size_limit must exceed partition key length")
 
-    rec_limit = put_records_limit
-    size_limit = put_records_size_limit
-    pk = partition_key
-    sname = stream_name
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         metrics.batches += 1
         persisted = None
@@ -236,88 +234,33 @@ def start_ingest_query(
         n_put_tasks = max(chunks.rdd.getNumPartitions(), 1)
 
         def put_partition(rows) -> None:
-            # Self-contained closure: no module-level references, so it
-            # unpickles on workers regardless of their PYTHONPATH.
-            from collections import namedtuple
-
-            Rec = namedtuple("Rec", ["partition_key", "data"])
-            client = client_factory()
-            limiter = None
+            # the Writer's counters reach the accumulators even when its
+            # retries run out and put raises (partial delivery is counted)
+            throttle = None
             if shard_rate_limits is not None:
                 from kinesis_spark.ingest.throttle import RateLimiter
 
-                limiter = RateLimiter(
+                throttle = RateLimiter(
                     shard_rate_limits[0] / n_put_tasks,
                     shard_rate_limits[1] / n_put_tasks,
                     start_empty=True,
                 )
-            batch: list = []
-            batch_bytes = 0
-            key_len = len(pk.encode())
-
-            def flush() -> None:
-                # At-least-once: re-put records whose response entry has
-                # ErrorCode set (the reference ignores PutRecordsOutput
-                # entirely — kinesis/kinesis.go:221,236; SURVEY §4 quirk 2).
-                nonlocal batch, batch_bytes
-                if not batch:
-                    return
-                pending = batch
-                for _attempt in range(4):
-                    # pay the shard envelope on EVERY attempt (the
-                    # synchronous Writer does the same, writer.py: a
-                    # throttled retry that skips the limiter would both
-                    # hammer the throttled shard and exceed the
-                    # configured aggregate rate)
-                    if limiter is not None:
-                        limiter.acquire(
-                            len(pending),
-                            sum(key_len + len(r.data) for r in pending),
-                        )
-                    responses = client.put_records(sname, pending)
-                    acc_calls.add(1)
-                    # positional per-record results (the Kinesis contract):
-                    # a missing/short response list means those records
-                    # have NO delivery evidence — retry them, never count
-                    # them as put (the reference's claim-success-on-
-                    # undelivered-bytes quirk this engine fixes, SURVEY §4)
-                    responses = list(responses or [])
-                    if len(responses) < len(pending):
-                        responses += [{"ErrorCode": "MissingResponse"}] * (
-                            len(pending) - len(responses)
-                        )
-                    failed = [
-                        rec
-                        for rec, resp in zip(pending, responses)
-                        if isinstance(resp, dict) and resp.get("ErrorCode")
-                    ]
-                    ok = len(pending) - len(failed)
-                    acc_records.add(ok)
-                    acc_bytes.add(
-                        sum(len(r.data) for r in pending) - sum(len(r.data) for r in failed)
-                    )
-                    if not failed:
-                        batch, batch_bytes = [], 0
-                        return
-                    acc_retried.add(len(failed))
-                    pending = failed
-                from kinesis_spark.ingest.writer import PutRecordsError
-
-                raise PutRecordsError(
-                    f"{len(pending)} records still failing after retries "
-                    f"on stream {sname!r}"
-                )
-
-            for row in rows:
-                data = bytes(row.chunk)
-                rsize = key_len + len(data)
-                if batch and (
-                    len(batch) >= rec_limit or batch_bytes + rsize > size_limit
-                ):
-                    flush()
-                batch.append(Rec(pk, data))
-                batch_bytes += rsize
-            flush()
+            writer = Writer(
+                client_factory(),
+                stream_name,
+                partition_key,
+                record_size_limit=record_size_limit,
+                put_records_limit=put_records_limit,
+                put_records_size_limit=put_records_size_limit,
+                throttle=throttle,
+            )
+            try:
+                writer.put(Record(partition_key, bytes(row.chunk)) for row in rows)
+            finally:
+                acc_calls.add(writer.put_calls)
+                acc_records.add(writer.records_put)
+                acc_bytes.add(writer.bytes_put)
+                acc_retried.add(writer.records_retried)
 
         try:
             chunks.foreachPartition(put_partition)

@@ -11,10 +11,10 @@ Offset model (exactly what a production Kinesis connector uses):
   nothing consumed, i.e. TRIM_HORIZON);
 - ``latestOffset`` probes the current tip per shard;
 - each micro-batch plans ONE partition per shard with new data — the
-  Kinesis unit of parallelism — and the executor-side ``read`` runs the
-  GetShardIterator → GetRecords loop through the injectable
-  :class:`~kinesis_spark.ingest.consumer.ShardIteratorClient` seam,
-  stopping at the batch's end sequence so replays are deterministic.
+  Kinesis unit of parallelism — and the executor-side ``read`` runs
+  ``ingest.consumer.iter_shard`` (GetShardIterator → GetRecords) through
+  the injectable :class:`~kinesis_spark.ingest.consumer.ShardIteratorClient`
+  seam, stopping at the batch's end sequence so replays are deterministic.
 
 Usage::
 
@@ -80,6 +80,7 @@ from kinesis_spark.ingest.consumer import (
     CONSUMER_SCHEMA,
     DEFAULT_N_SHARDS,
     SpoolConsumerClient,
+    shard_rows,
 )
 
 KINESIS_SOURCE_SCHEMA = CONSUMER_SCHEMA  # one record shape, both faces
@@ -308,14 +309,14 @@ class KinesisShardStreamReader(DataSourceStreamReader):
         try:
             floors = dict(self._committed)
             if self._leases is not None:
-                from kinesis_spark.ingest.leases import _seq_key
+                from kinesis_spark.ingest.leases import seq_key
 
                 for sh in client.list_shards(self._stream):
                     lc = self._leases.last_checkpoint(self._stream, sh)
-                    # _seq_key, not raw strings: lease checkpoints may be
+                    # seq_key, not raw strings: lease checkpoints may be
                     # variable-width digit sequences ('10' > '9') even
                     # though the spool's own seqs are fixed-width
-                    if _seq_key(lc) > _seq_key(floors.get(sh, "")):
+                    if seq_key(lc) > seq_key(floors.get(sh, "")):
                         floors[sh] = lc
             behind = probe(self._stream, floors)
             snap = {
@@ -391,36 +392,16 @@ class KinesisShardStreamReader(DataSourceStreamReader):
             # PySpark substitutes [None] for an empty partition list —
             # an empty stream is an empty batch, not a crash
             return
-        client = self._client()
-        if partition.start_after:
-            token = client.get_shard_iterator(
-                self._stream,
-                partition.shard_id,
-                "AFTER_SEQUENCE_NUMBER",
-                partition.start_after,
-            )
-        else:
-            token = client.get_shard_iterator(
-                self._stream, partition.shard_id, "TRIM_HORIZON"
-            )
-        while token:
-            resp = client.get_records(token, self._limit)
-            for r in resp["Records"]:
-                if r["SequenceNumber"] > partition.end_seq:
-                    return  # past this batch's end — later records belong
-                    # to the next micro-batch (deterministic replay)
-                yield (
-                    partition.shard_id,
-                    r["PartitionKey"],
-                    r["SequenceNumber"],
-                    bytearray(r["Data"]),
-                )
-            if not resp["Records"] and resp.get("MillisBehindLatest", 0) == 0:
-                # caught up to the tip; an empty page while still BEHIND
-                # (routine on real Kinesis) keeps iterating — returning
-                # early would drop the rest of a committed micro-batch
-                return
-            token = resp.get("NextShardIterator")
+        # records past end_seq belong to the next micro-batch
+        # (deterministic replay between two offsets)
+        yield from shard_rows(
+            self._client(),
+            self._stream,
+            partition.shard_id,
+            after=partition.start_after,
+            through=partition.end_seq,
+            limit=self._limit,
+        )
 
     def commit(self, end: dict) -> None:
         # offsets are durable in the streaming checkpoint; the spool

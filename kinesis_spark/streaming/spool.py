@@ -1,28 +1,28 @@
 """Spool-backed Kinesis stream emulation: a durable PutRecords sink client
-plus a Structured Streaming source that reads the spooled records back.
+plus the consumer-side reassembly of the records it spooled.
 
 This closes the round trip the reference leaves open: the reference only
 writes (kinesis/kinesis.go:199-242 ``Writer.Write`` → PutRecords); its
 consumers then read each shard in sequence order and ``io.Copy`` the record
 Data back out. Here the "stream" is a spool directory — the sink client
-appends one JSON-lines file per PutRecords call (atomic rename, so the
-streaming source never sees a partial file), the source is
-``spark.readStream.json`` over the directory with an explicit schema, and
-:func:`reassemble_records` is the consumer's ``io.Copy``: concatenate Data
-in sequence order per partition key.
+writes one JSON-lines file per PutRecords call (atomic rename, so a reader
+never sees a partial file). The one reader of that format is
+``ingest.consumer.SpoolConsumerClient`` (GetShardIterator/GetRecords over
+the directory); Spark reads it through the ``kinesis_consumer`` source
+(``spark.read`` / ``spark.readStream.format("kinesis_consumer")``,
+streaming/kinesis_source.py), and :func:`reassemble_records` is the
+consumer's ``io.Copy``: concatenate Data in sequence order per partition
+key.
 
 Sequence numbers are ``"<t_ns:020d>-<call:06d>-<idx:06d>"`` — strictly
 increasing per writer task, mirroring Kinesis per-shard sequence numbers
 under a fixed partition key (one writer → one shard,
 kinesis/kinesis.go:186-195).
 
-Scale notes:
-- The source is a plain file streaming source: parallel listing + read,
-  schema declared up front (no inference scan), ``maxFilesPerTrigger``
-  bounds micro-batch size.
-- Reassembly groups by partition key — at scale that is "per shard", the
-  exact unit a Kinesis consumer processes; a shard's backlog is bounded by
-  its throughput × retention, so the per-key concat is bounded too.
+Scale note: reassembly groups by partition key — at scale that is "per
+shard", the exact unit a Kinesis consumer processes; a shard's backlog is
+bounded by its throughput × retention, so the per-key concat is bounded
+too.
 """
 
 from __future__ import annotations
@@ -33,18 +33,8 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-SPOOL_SCHEMA = T.StructType(
-    [
-        T.StructField("stream", T.StringType()),
-        T.StructField("pk", T.StringType()),
-        T.StructField("seq", T.StringType()),
-        T.StructField("data", T.StringType()),  # base64; decoded by the source
-    ]
-)
 
 
 class SpoolStreamClient:
@@ -53,8 +43,8 @@ class SpoolStreamClient:
     (ingest/writer.py:45) whose output is replayable as a stream.
 
     One file per put call, written under a dotted temp name then renamed:
-    Spark's file source ignores hidden files, so a half-written call is
-    never observed.
+    the spool reader skips hidden files, so a half-written call is never
+    observed.
     """
 
     def __init__(self, spool_dir: str):
@@ -88,39 +78,6 @@ class SpoolStreamClient:
             f.write("\n".join(lines) + "\n")
         os.rename(tmp, os.path.join(self.spool_dir, name))
         return out
-
-
-def _decoded(df: DataFrame) -> DataFrame:
-    return df.select(
-        "stream", "pk", "seq", F.unbase64("data").alias("data")
-    )
-
-
-def build_spool_source(
-    spark: SparkSession,
-    spool_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming source over a spool directory → records
-    ``(stream, pk, seq, data binary)`` — the GetRecords analog.
-
-    FAILFAST, not the default PERMISSIVE: the spool is our own format,
-    so a malformed line (foreign file, external truncation) is
-    corruption to surface loudly — under PERMISSIVE it would become an
-    all-null row whose null ``data`` silently nulls the whole
-    reassembled stream for its key (``concat`` is null-propagating)."""
-    reader = spark.readStream.schema(SPOOL_SCHEMA).option("mode", "FAILFAST")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _decoded(reader.json(spool_dir))
-
-
-def read_spool(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """Batch variant of :func:`build_spool_source` (same schema + the
-    same FAILFAST corrupt-line policy)."""
-    return _decoded(
-        spark.read.schema(SPOOL_SCHEMA).option("mode", "FAILFAST").json(spool_dir)
-    )
 
 
 def reassemble_records(records: DataFrame) -> DataFrame:

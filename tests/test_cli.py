@@ -122,6 +122,41 @@ def test_cli_consume_filters_partition_key(tmp_path):
     assert out.getvalue() == b"BBB"
 
 
+def test_cli_consume_orders_sequences_numerically(monkeypatch):
+    """Real Kinesis sequence numbers are variable-length decimals: a key
+    whose parent shard ends at "999" and whose child starts at "1000"
+    must come out parent first, even with the child listed first."""
+    import kinesis_spark.ingest.consumer as consumer
+
+    pages = {
+        "shardId-child": [("1000", "k", b"C1"), ("1001", "other", b"X"),
+                          ("1002", "k", b"C2")],
+        "shardId-parent": [("998", "k", b"P1"), ("999", "k", b"P2")],
+    }
+
+    class ClosedShards:
+        def list_shards(self, stream_name):
+            return list(pages)
+
+        def get_shard_iterator(self, stream_name, shard_id, *args):
+            return shard_id
+
+        def get_records(self, shard_iterator, limit=10000):
+            return {
+                "Records": [
+                    {"SequenceNumber": s, "PartitionKey": pk, "Data": d}
+                    for s, pk, d in pages[shard_iterator]
+                ],
+                "NextShardIterator": None,  # SHARD_END
+                "MillisBehindLatest": 0,
+            }
+
+    monkeypatch.setattr(consumer, "make_boto3_consumer", lambda region: ClosedShards())
+    out = io.BytesIO()
+    assert main(["s", "-p", "k", "--consume"], stdout=out) == 0
+    assert out.getvalue() == b"P1P2C1C2"
+
+
 def test_bench_warmup_names_are_registered():
     """bench.py's untimed warm-up list must track registry renames —
     a silently-missing warm-up name would quietly reintroduce the

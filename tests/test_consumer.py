@@ -391,9 +391,11 @@ def test_consumer_batch_empty_stream_is_empty_df(spark, tmp_path):
     assert df.count() == 0
 
 
-def test_stream_reader_survives_empty_mid_stream_pages(tmp_path):
+@pytest.mark.parametrize("read_path", ["stream_reader", "batch_read"])
+def test_stream_reader_survives_empty_mid_stream_pages(read_path, request, tmp_path):
     """An empty GetRecords page with MillisBehindLatest > 0 (routine on
-    real Kinesis) must keep iterating, not truncate the micro-batch."""
+    real Kinesis) must keep iterating, not truncate the read — on both
+    Spark readers, which share ``iter_shard``'s stop rule."""
     from kinesis_spark.streaming.kinesis_source import (
         KinesisShardStreamReader,
         ShardRange,
@@ -422,9 +424,14 @@ def test_stream_reader_survives_empty_mid_stream_pages(tmp_path):
                 }
             return super().get_records(it, min(limit, 2))
 
-    reader = KinesisShardStreamReader({"spool_dir": spool, "stream": STREAM})
-    reader._client = lambda: EmptyPagey(spool)
-    shard = shard_for_key(pk)
-    tip = SpoolConsumerClient(spool).latest_sequence_numbers(STREAM)[shard]
-    rows = list(reader.read(ShardRange(shard, "", tip)))
+    factory = lambda: EmptyPagey(spool)  # noqa: E731
+    if read_path == "stream_reader":
+        reader = KinesisShardStreamReader({"spool_dir": spool, "stream": STREAM})
+        reader._client = factory
+        shard = shard_for_key(pk)
+        tip = SpoolConsumerClient(spool).latest_sequence_numbers(STREAM)[shard]
+        rows = list(reader.read(ShardRange(shard, "", tip)))
+    else:
+        spark = request.getfixturevalue("spark")
+        rows = read_stream_batch(spark, factory, STREAM).collect()
     assert b"".join(bytes(r[3]) for r in rows) == b"ABCDE"

@@ -9,7 +9,20 @@ import json
 from pyspark.sql import functions as F
 
 from kinesis_spark.replay import replay_table
-from kinesis_spark.streaming.spool import SpoolStreamClient, read_spool
+from kinesis_spark.streaming.kinesis_source import KinesisConsumerDataSource
+from kinesis_spark.streaming.spool import SpoolStreamClient
+
+
+def _records(spark, spool: str, stream: str):
+    """Records put to ``stream``, read back through the
+    ``kinesis_consumer`` source."""
+    spark.dataSource.register(KinesisConsumerDataSource)
+    return (
+        spark.read.format("kinesis_consumer")
+        .option("spool_dir", spool)
+        .option("stream", stream)
+        .load()
+    )
 
 
 def _table(spark, path: str, n: int = 40) -> None:
@@ -30,9 +43,11 @@ def test_replay_delivers_every_row_once_as_json(spark, tmp_path):
     assert m.rows_dropped == 0 and m.bytes_dropped == 0
     assert m.records_put == 40  # one JSON line per row, none chunk-split
 
-    rows = read_spool(spark, spool).collect()
+    rows = _records(spark, spool, "events-replay").collect()
     assert len(rows) == 40
-    assert all(r.stream == "events-replay" and r.pk == "pk-1" for r in rows)
+    # every record put is found under the replay's stream name
+    assert len(rows) == m.records_put
+    assert all(r.pk == "pk-1" for r in rows)
     seen = {json.loads(bytes(r.data).decode())["doc_id"] for r in rows}
     assert seen == set(range(40))
     # newline framing: the concatenated stream is line-parseable
@@ -50,7 +65,7 @@ def test_replay_single_task_preserves_file_order(spark, tmp_path):
         spark, table, lambda: SpoolStreamClient(spool), "s", "pk",
         single_task=True,
     )
-    rows = read_spool(spark, spool).orderBy("seq").collect()
+    rows = _records(spark, spool, "s").orderBy("seq").collect()
     ids = [json.loads(bytes(r.data).decode())["doc_id"] for r in rows]
     assert ids == list(range(30))  # spool seq order == single-file row order
 
@@ -73,7 +88,7 @@ def test_replay_custom_payload_and_chunking(spark, tmp_path):
     )
     # each 251-byte payload splits into ceil(251/100) = 3 records
     assert m.records_put == 9
-    rows = read_spool(spark, spool).orderBy("seq").collect()
+    rows = _records(spark, spool, "s").orderBy("seq").collect()
     assert len(rows) == 9
     # seq order reconstructs the byte stream exactly: payloads in row
     # order, each payload's chunks contiguous and in order

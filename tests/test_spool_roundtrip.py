@@ -1,5 +1,5 @@
 """End-to-end ingest round trip: payloads → chunk → PutRecords spool sink →
-streaming spool source → io.Copy reassembly → original bytes.
+``kinesis_consumer`` source → io.Copy reassembly → original bytes.
 
 This is the "Kinesis source" half of the north star: the reference only
 writes (kinesis/kinesis.go:199-242); a consumer reads records per shard in
@@ -15,12 +15,8 @@ import time
 import pytest
 
 from kinesis_spark.streaming.ingest import build_text_source, start_ingest_query
-from kinesis_spark.streaming.spool import (
-    SpoolStreamClient,
-    build_spool_source,
-    read_spool,
-    reassemble_records,
-)
+from kinesis_spark.streaming.kinesis_source import KinesisConsumerDataSource
+from kinesis_spark.streaming.spool import SpoolStreamClient, reassemble_records
 
 # Deterministic ASCII payloads, sizes chosen to straddle the 101-byte chunk
 # size below (1 under, exact, 1 over, multiple, large remainder).
@@ -31,6 +27,19 @@ PAYLOADS = [
 RECORD_SIZE_LIMIT = 103  # minus len("pk") → 101-byte chunks
 CHUNK = RECORD_SIZE_LIMIT - len("pk")
 EXPECTED_CHUNKS = sum(-(-len(p) // CHUNK) for p in PAYLOADS)
+STREAM = "roundtrip"
+
+
+def _records(spark, spool: str, streaming: bool = False):
+    """The spool read back through the ``kinesis_consumer`` source."""
+    spark.dataSource.register(KinesisConsumerDataSource)
+    return (
+        (spark.readStream if streaming else spark.read)
+        .format("kinesis_consumer")
+        .option("spool_dir", spool)
+        .option("stream", STREAM)
+        .load()
+    )
 
 
 def _ingest(spark, indir: str, spool: str) -> None:
@@ -38,7 +47,7 @@ def _ingest(spark, indir: str, spool: str) -> None:
     query, metrics = start_ingest_query(
         src,
         client_factory=lambda: SpoolStreamClient(spool),
-        stream_name="roundtrip",
+        stream_name=STREAM,
         partition_key="pk",
         record_size_limit=RECORD_SIZE_LIMIT,
         trigger_seconds=0.5,
@@ -69,7 +78,7 @@ def test_spool_round_trip_bytes_exact(spark, tmp_path):
     # read the spool back as a stream (availableNow drains it exactly once)
     out_name = "rt_records"
     q = (
-        build_spool_source(spark, spool)
+        _records(spark, spool, streaming=True)
         .writeStream.format("memory")
         .queryName(out_name)
         .trigger(availableNow=True)
@@ -91,7 +100,7 @@ def test_spool_round_trip_bytes_exact(spark, tmp_path):
     assert row[0].n_bytes == len(want)
 
     # batch reader sees the identical record set
-    batch = read_spool(spark, spool)
+    batch = _records(spark, spool)
     assert batch.count() == EXPECTED_CHUNKS
     assert bytes(reassemble_records(batch).collect()[0].stream_bytes) == want
 
@@ -108,7 +117,7 @@ def test_spool_records_respect_size_limit(spark, tmp_path):
     import pyspark.sql.functions as F
 
     sizes = (
-        read_spool(spark, spool)
+        _records(spark, spool)
         .select(F.length("data").alias("n"))
         .collect()
     )

@@ -4,6 +4,7 @@ load-shed valve. Kept short (a few trigger periods each) for CI stability.
 
 from __future__ import annotations
 
+import base64
 import glob
 import json
 import os
@@ -13,6 +14,7 @@ import uuid
 import pytest
 
 from kinesis_spark.streaming.ingest import build_rate_source, start_ingest_query
+from kinesis_spark.streaming.spool import SpoolStreamClient
 
 SPOOL = "/tmp/kinesis_spark_spool"
 
@@ -41,7 +43,7 @@ class SpoolClient:
         return [{} for _ in records]
 
 
-def _read_spool(spool_dir):
+def _spool_entries(spool_dir):
     out = []
     for p in glob.glob(f"{spool_dir}/*.jsonl"):
         with open(p) as f:
@@ -77,7 +79,7 @@ def test_soak_no_drops(spark, tmp_path):
     metrics = _run_query(spark, spool)
     assert metrics.rows_dropped == 0
     assert metrics.records_put > 0
-    entries = _read_spool(spool)
+    entries = _spool_entries(spool)
     assert entries, "no PutRecords calls reached the spool"
     assert {e["stream"] for e in entries} == {"bench-stream"}
     assert {e["pk"] for e in entries} == {"pk"}
@@ -115,7 +117,7 @@ def test_chunking_in_stream(spark, tmp_path):
             time.sleep(0.25)
     finally:
         query.stop()
-    entries = _read_spool(spool)
+    entries = _spool_entries(spool)
     assert entries
     sizes = sorted({e["n"] for e in entries})
     assert sizes == [109, 297], sizes  # 1000 = 3*297 + 109
@@ -167,7 +169,7 @@ def test_error_code_records_are_retried(spark, tmp_path):
         query.stop()
     assert metrics.records_retried > 0, "no retries happened"
     assert metrics.records_put >= 20
-    entries = _read_spool(spool)
+    entries = _spool_entries(spool)
     # every spooled record arrived exactly once despite first-try failures
     assert len(entries) == metrics.records_put
 
@@ -198,7 +200,7 @@ def test_text_file_source_ingest(spark, tmp_path):
             time.sleep(0.25)
     finally:
         query.stop()
-    entries = _read_spool(spool)
+    entries = _spool_entries(spool)
     assert sum(e["n"] for e in entries) == sum(len(l) for l in lines)
 
 
@@ -262,3 +264,131 @@ def test_progress_listener_reports_input_rows(spark, tmp_path):
         spark.streams.removeListener(listener)
     assert metrics.input_rows > 0
     assert metrics.last_batch_duration_ms >= 0
+
+
+class CallLog:
+    """put_records fake for bounded drains: appends one JSON line per call
+    (wall time, record sizes) to ``log_path`` and spools the records it
+    accepts with ``SpoolStreamClient``. ``mode`` picks the injected fault:
+    ``"fail_first"`` fails each record's first attempt, ``"short"``
+    answers the first call one response short (and does not spool that
+    record), ``"fail"`` fails every record."""
+
+    def __init__(self, spool_dir: str, log_path: str, mode: str | None = None):
+        self.spool = SpoolStreamClient(spool_dir)
+        self.log_path = log_path
+        self.mode = mode
+        self.calls = 0
+        self.seen: set = set()
+
+    def put_records(self, stream_name, records):
+        self.calls += 1
+        with open(self.log_path, "a") as f:
+            f.write(json.dumps({"t": time.time(),
+                                "sizes": [len(r.data) for r in records]}) + "\n")
+        if self.mode == "fail":
+            return [{"ErrorCode": "InternalFailure"}] * len(records)
+        if self.mode == "short" and self.calls == 1:
+            records = records[:-1]
+        ok = [self.mode != "fail_first" or bytes(r.data) in self.seen for r in records]
+        self.seen.update(bytes(r.data) for r in records)
+        accepted = [r for r, good in zip(records, ok) if good]
+        if accepted:
+            self.spool.put_records(stream_name, accepted)
+        return [{} if good else {"ErrorCode": "ProvisionedThroughputExceededException"}
+                for good in ok]
+
+
+LINES = [f"line-{i:03d}-" + "z" * (i % 23) for i in range(40)]
+
+
+def _calls(log_path: str) -> list[dict]:
+    with open(log_path) as f:
+        return [json.loads(line) for line in f]
+
+
+def _spooled_chunks(spool: str) -> list[bytes]:
+    return [base64.b64decode(e["data"]) for e in _spool_entries(spool)]
+
+
+def _drain(spark, tmp_path, mode=None, **kwargs):
+    """One availableNow drain of ``LINES`` (one text file, coalesced to
+    one partition, so one put task) through a ``CallLog`` client."""
+    from kinesis_spark.streaming.ingest import build_text_source
+
+    src_dir = tmp_path / "in"
+    src_dir.mkdir()
+    (src_dir / "a.txt").write_text("\n".join(LINES) + "\n")
+    spool, log_path = str(tmp_path / "spool"), str(tmp_path / "calls.jsonl")
+    query, metrics = start_ingest_query(
+        build_text_source(spark, str(src_dir)).coalesce(1),
+        client_factory=lambda: CallLog(spool, log_path, mode),
+        stream_name="drain",
+        partition_key="pk",
+        available_now=True,
+        **kwargs,
+    )
+    return query, metrics, spool, log_path
+
+
+@pytest.mark.streaming
+def test_sink_packs_requests_like_writer_put(spark, tmp_path):
+    """Under small count and size caps, the sink's requests are exactly
+    the batches ``Writer.put`` packs from the same chunks."""
+    from kinesis_spark.ingest.writer import Record, Writer
+
+    query, metrics, spool, log_path = _drain(
+        spark, tmp_path, put_records_limit=4, put_records_size_limit=80
+    )
+    assert query.awaitTermination(60)
+    seen = [s for c in _calls(log_path) for s in c["sizes"]]
+    chunks = _spooled_chunks(spool)
+    assert sorted(chunks) == sorted(line.encode() for line in LINES)
+
+    # chunks of the same sizes, in the order the sink put them, through
+    # Writer.put (packing depends on sizes only)
+    local = CallLog(str(tmp_path / "local"), str(tmp_path / "local.jsonl"))
+    Writer(local, "drain", "pk", put_records_limit=4,
+           put_records_size_limit=80).put(Record("pk", b"x" * n) for n in seen)
+    want = [c["sizes"] for c in _calls(str(tmp_path / "local.jsonl"))]
+    got = [c["sizes"] for c in _calls(log_path)]
+    assert got == want
+    assert len(got) > -(-len(LINES) // 4)  # the size cap cut some batches
+    assert metrics.put_calls == len(got) and metrics.records_put == len(LINES)
+
+
+@pytest.mark.streaming
+def test_sink_retries_records_missing_a_response(spark, tmp_path):
+    """A response list one entry short leaves that record without
+    delivery evidence: it is re-put, and every chunk lands exactly once."""
+    query, metrics, spool, _ = _drain(spark, tmp_path, mode="short")
+    assert query.awaitTermination(60)
+    assert sorted(_spooled_chunks(spool)) == sorted(line.encode() for line in LINES)
+    assert metrics.records_retried > 0
+    assert metrics.records_put == len(LINES)
+
+
+@pytest.mark.streaming
+def test_sink_failure_raises_and_records_error(spark, tmp_path):
+    """Records that still fail after the retries fail the query, and the
+    metrics mirror says why."""
+    from pyspark.errors import StreamingQueryException
+
+    query, metrics, spool, _ = _drain(spark, tmp_path, mode="fail")
+    with pytest.raises(StreamingQueryException):
+        query.awaitTermination(60)
+    assert metrics.errors
+    assert not os.path.isdir(spool)  # nothing was accepted
+
+
+@pytest.mark.streaming
+def test_sink_retry_backs_off(spark, tmp_path):
+    """Un-throttled (the default), a failed put is retried after the
+    writer's backoff, not in the same throttled second."""
+    query, metrics, spool, log_path = _drain(spark, tmp_path, mode="fail_first")
+    assert query.awaitTermination(60)
+    calls = _calls(log_path)
+    assert len(calls) == 2  # every record fails once, then succeeds
+    assert calls[1]["t"] - calls[0]["t"] >= 0.2
+    assert metrics.records_retried == len(LINES)
+    assert sorted(_spooled_chunks(spool)) == sorted(line.encode() for line in LINES)
