@@ -165,7 +165,9 @@ class Writer:
             )
             if not failed:
                 return
-            self.records_retried += len(failed)
+            if attempt < self.max_retries:
+                # the last attempt's failures are never re-put
+                self.records_retried += len(failed)
             pending = failed
         raise PutRecordsError(
             f"{len(pending)} records still failing after "

@@ -13,7 +13,7 @@ is ``documents.parquet`` at every scale factor.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -710,6 +710,39 @@ def dq5_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def diff_by_key(a, b, key: str, fingerprint: Column):
+    """Snapshot reconciliation: classify every key as added / removed /
+    changed between two corpus snapshots, by comparing a row fingerprint
+    (e.g. ``F.md5("text")``) computed on each side. Returns
+    ``(key, status)`` rows for every key whose status is not
+    'unchanged'.
+
+    Scale shape (the 100 TB snapshot-diff): the fingerprint is computed
+    MAP-SIDE on each snapshot scan, so only (key, 16-byte hash, flag)
+    ever shuffles — document bodies never leave their scan. One
+    full-outer shuffle join on the unique key (skew-free by
+    construction); output is proportional to the churn, not the corpus.
+    Presence is tracked with explicit flags, not hash nullness, so a
+    NULL payload (fingerprint NULL) still diffs correctly.
+    """
+    fa = a.select(F.col(key), fingerprint.alias("_h_a"), F.lit(True).alias("_in_a"))
+    fb = b.select(F.col(key), fingerprint.alias("_h_b"), F.lit(True).alias("_in_b"))
+    joined = fa.join(fb, key, "full_outer")
+    status = (
+        F.when(F.col("_in_a").isNull(), F.lit("added"))
+        .when(F.col("_in_b").isNull(), F.lit("removed"))
+        .when(
+            ~F.col("_h_a").eqNullSafe(F.col("_h_b")), F.lit("changed")
+        )  # eqNullSafe: NULL payload on one side only is a change
+        .otherwise(F.lit("unchanged"))
+    )
+    return (
+        joined.withColumn("status", status)
+        .filter(F.col("status") != "unchanged")
+        .select(key, "status")
+    )
+
+
 @register(
     "prov4_snapshot_diff",
     oracle="""
@@ -737,14 +770,12 @@ def prov4_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived deterministically from the documents fixture (A drops
     doc_id%10==0, B drops %10==5 and revises %7==0 bodies — a stand-in
     for two partitioned-store publishes); the diff itself is the
-    generic ``partitioned_store.diff_by_key``: map-side md5 fingerprints,
-    ONE full-outer shuffle join carrying (key, 16-byte hash) — bodies
-    never shuffle — emitting only churned keys (added/removed/changed).
+    generic :func:`diff_by_key`: map-side md5 fingerprints, ONE
+    full-outer shuffle join carrying (key, 16-byte hash) — bodies never
+    shuffle — emitting only churned keys (added/removed/changed).
     The fixture has non-null text, so the oracle's null-free CASE is
     exact; diff_by_key itself is null-payload-proof via presence flags.
     """
-    from kinesis_spark.partitioned_store import diff_by_key
-
     d = load_table(spark, sf_dir, "documents")
     snap_a = d.filter(F.col("doc_id") % 10 != 0).select("doc_id", "text")
     snap_b = d.filter(F.col("doc_id") % 10 != 5).select(

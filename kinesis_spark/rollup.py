@@ -16,11 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_spark.partitioned_store import (
-    dynamic_partition_overwrite,
-    is_missing_store,
-    touched_partition_filter,
-)
 from kinesis_spark.pins import pin, scope
 
 #: rollup schema: day (date), event_type, n_events (long), sum_value decimal
@@ -62,48 +57,23 @@ def _merge(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 @scope()
-def refresh_daily_rollup(
-    spark: SparkSession, rollup_dir: str, new_events: DataFrame
-) -> int:
-    """Merge a batch of new events into the stored rollup at
-    ``rollup_dir`` (parquet, partitioned by day). Returns the number of
-    day partitions rewritten. First call bootstraps the store."""
-    # materialize once: the days collect and the merge/write would
-    # otherwise each re-aggregate the batch
-    batch = daily_rollup_state(new_events).transform(pin)
-    days = [r[0] for r in batch.select("day").distinct().collect()]
-    if not days:
-        return 0
-    touched = touched_partition_filter("day", days)
-
-    with dynamic_partition_overwrite(spark):
-        from pyspark.errors import AnalysisException
-
-        try:
-            stored = spark.read.parquet(rollup_dir).filter(touched)
-            merged = _merge(stored.select(*_STATE_COLS), batch).transform(pin)
-        except AnalysisException as exc:
-            # bootstrap ONLY on a genuinely missing store; schema drift or
-            # an unreadable store must raise, never silently discard state
-            if not is_missing_store(exc):
-                raise
-            merged = batch
-        merged.write.mode("overwrite").partitionBy("day").parquet(rollup_dir)
-    return len(days)
-
-
-@scope()
 def tx_refresh_daily_rollup(
     spark: SparkSession, root: str, new_events: DataFrame
 ) -> int:
-    """Transactional face of :func:`refresh_daily_rollup` (txstore's
-    write-audit-publish): the merged day partitions are staged, audited,
-    and become visible in ONE manifest swap — a crash mid-refresh leaves
-    the previous rollup fully intact, and a reader never sees half the
-    touched days merged. The snapshot version is pinned (expect_version)
-    because the merge reads stored state: committing over a concurrent
-    refresh would silently drop its increments — the exact lost-update
-    the plain dynamic-overwrite path cannot detect."""
+    """Merge a batch of new events into the transactional rollup store at
+    ``root`` (partitioned by day). Returns the number of day partitions
+    rewritten; an empty batch returns 0 and publishes nothing. The first
+    call, on a store that does not exist yet, bootstraps it from the
+    batch.
+
+    Only the batch's days are read back, merged with the batch state and
+    staged; txstore's write-audit-publish then makes them visible in ONE
+    manifest swap, so a crash mid-refresh leaves the previous rollup
+    fully intact and a reader never sees half the touched days merged.
+    Untouched days keep their generation. The snapshot version is pinned
+    (``expect_version``) because the merge reads stored state:
+    committing over a concurrent refresh would silently drop its
+    increments (lost update), so that commit raises instead."""
     from kinesis_spark.txstore import tx_current_manifest, tx_publish, tx_read
 
     batch = daily_rollup_state(new_events).transform(pin)
@@ -126,32 +96,3 @@ def tx_refresh_daily_rollup(
         expect_version=man["version"],
     )
     return len(days)
-
-
-def streaming_rollup_query(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    rollup_dir: str,
-    checkpoint_dir: str,
-):
-    """Continuous rollup maintenance: each micro-batch's partial
-    aggregates merge into the stored rollup via ``foreachBatch`` —
-    the streaming face of ``refresh_daily_rollup``. The sink is
-    idempotent per batch only through the merge's day-partition
-    overwrite; exactly-once across restarts comes from the checkpoint
-    replaying whole micro-batches (the merge of a replayed batch is NOT
-    idempotent, so production pairs this with batch-id dedup — here the
-    checkpoint suffices for the availableNow drain used in tests).
-
-    Returns the started StreamingQuery.
-    """
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        refresh_daily_rollup(spark, rollup_dir, batch_df)
-
-    return (
-        events_stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -87,6 +87,7 @@ import hashlib
 import os
 import urllib.parse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,6 +100,12 @@ from kinesis_spark.txstore import (
 )
 
 WS = r"[ \t\n\f\r\x0B]+"
+
+
+def is_missing_store(exc: AnalysisException) -> bool:
+    """True only for a genuinely missing path — any other analysis error
+    (schema drift, unreadable store) must raise, never read as empty."""
+    return "PATH_NOT_FOUND" in (exc.getCondition() or "")
 
 
 class PrepIntakeSink:
@@ -166,10 +173,6 @@ class PrepIntakeSink:
 
     def _existing(self, path: str, col: str) -> DataFrame:
         """The one string column ``col`` of the index at ``path``."""
-        from pyspark.errors import AnalysisException
-
-        from kinesis_spark.partitioned_store import is_missing_store
-
         try:
             return self.spark.read.schema(f"{col} string").parquet(path)
         except AnalysisException as exc:

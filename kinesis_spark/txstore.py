@@ -1,13 +1,13 @@
-"""Transactional partitioned parquet store — write-audit-publish commits
-for the maintenance suite (upsert / erasure / compaction).
+"""Transactional partitioned parquet store — the engine's one table
+write path: write-audit-publish commits for append, upsert, erasure,
+compaction and the rollup refresh (rollup.py).
 
-The plain-directory maintenance ops (upsert.py, erasure.py, compact.py)
-rely on dynamic partition overwrite and raw directory deletes: a job
-that dies mid-rewrite leaves a torn table (some partitions new, some
-old) and concurrent readers can observe partial state. At 100 TB that
-is the first operational incident. This module closes the gap with a
-minimal table format built only on parquet + an append-only JSON commit
-log — no external dependency:
+Rewriting a plain parquet directory in place (dynamic partition
+overwrite, raw directory deletes) leaves a torn table when the job dies
+mid-rewrite (some partitions new, some old), and concurrent readers can
+observe partial state. At 100 TB that is the first operational
+incident. This module avoids it with a minimal table format built only
+on parquet + an append-only JSON commit log — no external dependency:
 
 Layout::
 
@@ -72,7 +72,13 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BooleanType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _TXLOG = "_txlog"
@@ -910,13 +916,31 @@ def tx_upsert(
     key: str,
     arbiter: CommitArbiter | None = None,
 ) -> int:
-    """MERGE ``updates`` into the store — the transactional face of
-    ``upsert.upsert_partitioned`` (same key/null/duplicate discipline),
-    with the rewrite published atomically. Works on unpartitioned,
-    single-level, and multi-level (e.g. (cell, tenant)) layouts — the
-    touched-partition set is the distinct partition-column TUPLES in the
-    deduplicated updates. Returns partitions rewritten (1 for an
-    unpartitioned store)."""
+    """MERGE ``updates`` into the store (the CDC apply step), published
+    atomically. Rows in ``updates`` replace the stored rows with the same
+    ``key``; new keys are inserted. Returns partitions rewritten (1 for
+    an unpartitioned store); an empty batch returns 0 and publishes
+    nothing.
+
+    - Keys compare null-safe: a NULL-key update REPLACES the stored
+      NULL-key row (plain equality never matches NULL, so the old row
+      would survive the anti join and the new one union in beside it).
+    - Duplicate keys within one batch collapse to one whole row: the
+      struct-max keeps the lexicographically greatest row intact and
+      never mixes fields across rows. Emit pre-deduped batches when the
+      winner matters.
+    - Applying the same batch twice gives the same content
+      (last-write-wins per key), so a replayed micro-batch converges.
+    - Only the touched partitions — the distinct partition-column
+      TUPLES of the deduplicated updates — are read back, merged and
+      staged; every other partition keeps its generation. So a key's
+      partition value may change only if the caller also erases it from
+      the old partition (the usual contract for partition-keyed stores).
+    - The merge join is un-hinted: statistics/AQE broadcast the key set
+      while it fits and fall back to a shuffle join for a large backfill.
+
+    Works on unpartitioned, single-level and multi-level (e.g. (cell,
+    tenant)) layouts."""
     man = tx_current_manifest(spark, root)
     pcols = _norm_pcols(man["partition_col"])
     other = [c for c in updates.columns if c != key]
@@ -973,8 +997,7 @@ def streaming_tx_upsert_query(
     checkpoint_dir: str,
     arbiter: CommitArbiter | None = None,
 ):
-    """Streaming face of :func:`tx_upsert` (mirrors
-    ``upsert.streaming_upsert_query``): each micro-batch MERGEs into the
+    """Streaming face of :func:`tx_upsert`: each micro-batch MERGEs into the
     transactional store as one atomic commit, so a reader polling the
     store between micro-batches always sees a complete batch boundary —
     never a half-applied batch. Replaying a whole micro-batch after a
@@ -993,6 +1016,17 @@ def streaming_tx_upsert_query(
     )
 
 
+#: the audit :func:`tx_erase` returns, one row per touched partition
+AUDIT_SCHEMA = StructType(
+    [
+        StructField("partition_value", StringType(), True),
+        StructField("n_rows_erased", LongType(), False),
+        StructField("n_keys_matched", LongType(), False),
+        StructField("partition_emptied", BooleanType(), False),
+    ]
+)
+
+
 def tx_erase(
     spark: SparkSession,
     root: str,
@@ -1001,13 +1035,35 @@ def tx_erase(
     erase_retention: bool = False,
     arbiter: CommitArbiter | None = None,
 ) -> DataFrame:
-    """Right-to-erasure on the transactional store — the WAP face of
-    ``erasure.erase_by_key`` (same locate/rewrite phases and audit
-    schema). A fully-emptied partition simply drops out of the new
-    manifest — no directory delete in the commit path, so a crash can
-    never leave the erased rows half-visible. Works on single- and
-    multi-level layouts; for multi-level stores the audit's
-    ``partition_value`` is the manifest's JSON tuple key.
+    """Right-to-erasure: remove every row whose ``key`` appears in
+    ``request`` (a DataFrame carrying the key column) and publish the
+    rewrite atomically. The request carries ONLY keys — the caller
+    usually does not know where a user's rows live — so the operation
+    has two phases:
+
+    1. LOCATE — a column-pruned (key, partition columns) projection of
+       the current version, semi-joined with the request: one scan that
+       reads those columns and nothing else. The touched-partition list
+       it yields is bounded by the request's spread, not the table.
+    2. REWRITE — only the touched partitions are read back (pruned at
+       the manifest) and staged without the matching rows, then
+       published against the located version (``expect_version``). A
+       partition whose rows are ALL erased simply drops out of the new
+       manifest — no directory delete in the commit path, so a crash
+       can never leave the erased rows half-visible.
+
+    Returns the audit DataFrame (:data:`AUDIT_SCHEMA`), the deletion
+    evidence a compliance workflow records: one row per touched
+    partition with ``partition_value`` (for multi-level stores the
+    manifest's JSON tuple key), ``n_rows_erased``, ``n_keys_matched``
+    (distinct keys, a NULL key counting as one) and
+    ``partition_emptied``. Keys that matched nothing do not appear (the
+    caller compares against its request to prove completeness); a
+    request that matches nothing publishes no version. A missing store
+    raises ``FileNotFoundError`` — an erasure that silently no-ops is a
+    compliance bug, not a convenience. NULL keys in the request match
+    NULL-key rows (null-safe, as in :func:`tx_upsert`): a store that let
+    a NULL-keyed row in must be able to forget it.
 
     RETENTION CONTRACT (the Delta DELETE-then-VACUUM gotcha, made
     explicit): the commit removes the rows from the CURRENT version
@@ -1024,8 +1080,6 @@ def tx_erase(
     before the retention sweep leaves the store exactly as the
     ``erase_retention=False`` contract describes — re-run the sweep
     via ``tx_vacuum(keep_manifests=1)``."""
-    from kinesis_spark.erasure import AUDIT_SCHEMA
-
     man = tx_current_manifest(spark, root)
     pcols = _norm_pcols(man["partition_col"])
     req = request.select(F.col(key).alias("_erase_key")).distinct()
@@ -1153,21 +1207,20 @@ def _purge_unreferenced_partition_dirs(
 def tx_compact(
     spark: SparkSession,
     root: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
     arbiter: CommitArbiter | None = None,
 ) -> int:
     """Small-file compaction, published atomically: rewrites the whole
-    table into ~one target-sized file per partition value and commits it
-    as one new generation; readers flip from the fragmented layout to
-    the compacted one in a single manifest swap. Returns the number of
-    data files written.
+    table into one file per partition value (one file in all for an
+    unpartitioned store) and commits it as one new generation; readers
+    flip from the fragmented layout to the compacted one in a single
+    manifest swap. Returns the number of data files written.
 
-    Plan shape: one shuffle keyed on the partition column, so each
+    Plan shape: one shuffle keyed on the partition columns, so each
     value's rows land in one task and the partitioned write emits one
-    file per value (the per-partition data is assumed <= a few target
-    units — the small-file regime this op exists for; a giant partition
-    would keep its single file and is a splitting problem, not a
-    compaction one).
+    file per value (the small-file regime this op exists for; a giant
+    partition keeps its single file and is a splitting problem, not a
+    compaction one). :func:`tx_compact_partitions` compacts only the
+    fragmented partitions.
     """
     man = tx_current_manifest(spark, root)
     pcols = _norm_pcols(man["partition_col"])
@@ -1445,8 +1498,7 @@ def streaming_tx_erasure_query(
     erase_retention: bool = False,
     arbiter: CommitArbiter | None = None,
 ):
-    """Streaming face of :func:`tx_erase` (mirrors
-    ``erasure.streaming_erasure_query``): each micro-batch of erasure
+    """Streaming face of :func:`tx_erase`: each micro-batch of erasure
     requests commits atomically; erasing an already-erased key matches
     nothing and publishes nothing, so checkpoint replays converge.
     ``erase_retention`` passes through to :func:`tx_erase` — the

@@ -93,6 +93,9 @@ def test_error_code_exhausts_retries():
     w = Writer(c, "s", "key", record_size_limit=1000, max_retries=3)
     with pytest.raises(PutRecordsError):
         w.write(b"a")
+    # one first attempt + three retries; the fourth failure is not re-put
+    assert w.put_calls == 4
+    assert w.records_retried == 3
 
 
 class ShortResponseClient:

@@ -35,7 +35,7 @@ def test_metadata_costs_no_extra_scan(spark, sf_dir):
 def test_diff_by_key_classifies_and_survives_null_payloads(spark):
     from pyspark.sql import functions as F
 
-    from kinesis_spark.partitioned_store import diff_by_key
+    from kinesis_spark.queries.lineage import diff_by_key
 
     a = spark.createDataFrame(
         [(1, "same"), (2, "old"), (3, "gone"), (4, None), (5, None)],
@@ -121,7 +121,7 @@ def test_diff_by_key_matches_python_reference_on_random_snapshots(spark):
 
     from pyspark.sql import functions as F
 
-    from kinesis_spark.partitioned_store import diff_by_key
+    from kinesis_spark.queries.lineage import diff_by_key
 
     rng = random.Random(20260814)
     payloads = [None, "alpha", "beta", "gamma"]

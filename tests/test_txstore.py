@@ -152,8 +152,14 @@ def test_tx_upsert_merges_atomically(spark, store):
         F.min("o_orderkey")
     ).first()[0]
     new_key = tgt.agg(F.max("o_orderkey")).first()[0] + 1_000_000
+    # new_key twice in one batch: collapses to ONE whole row, the
+    # struct-greatest (1.0, "N") — never a chimera like (1.0, "Z")
     updates = spark.createDataFrame(
-        [(some_key, 99999.0, "U", touched), (new_key, 1.0, "N", touched)],
+        [
+            (some_key, 99999.0, "U", touched),
+            (new_key, 1.0, "N", touched),
+            (new_key, 0.5, "Z", touched),
+        ],
         "o_orderkey long, o_totalprice double, o_orderstatus string, month string",
     )
     n_before = tgt.count()
@@ -163,6 +169,8 @@ def test_tx_upsert_merges_atomically(spark, store):
     assert after.filter(F.col("o_orderkey") == some_key).first()[
         "o_totalprice"
     ] == 99999.0
+    new_rows = after.filter(F.col("o_orderkey") == new_key).collect()
+    assert [(r.o_totalprice, r.o_orderstatus) for r in new_rows] == [(1.0, "N")]
     # untouched partitions still point at the original generation
     man = tx_current_manifest(spark, store)
     gens = {
@@ -173,6 +181,10 @@ def test_tx_upsert_merges_atomically(spark, store):
     }
     assert len(gens) == 1  # all untouched partitions share the v1 generation
     assert man["partitions"][touched][0].split("/")[1] not in gens
+    # the same batch again (a CDC replay) leaves the same content
+    merged = _snapshot(spark, store)
+    assert tx_upsert(spark, store, updates, key="o_orderkey") == 1
+    assert _snapshot(spark, store) == merged
 
 
 def test_tx_erase_empties_partition_atomically(spark, store):
@@ -189,6 +201,14 @@ def test_tx_erase_empties_partition_atomically(spark, store):
     # erased generation still on disk until vacuum; table already consistent
     tx_vacuum(spark, store, keep_manifests=1)
     assert after.count() == tx_read(spark, store).count()
+    # a key the store does not hold: empty audit, no new version
+    v = tx_current_manifest(spark, store)["version"]
+    unknown = spark.createDataFrame([(-1,)], "o_orderkey long")
+    assert tx_erase(spark, store, unknown, key="o_orderkey").count() == 0
+    assert tx_current_manifest(spark, store)["version"] == v
+    # an erasure against a store that does not exist must not no-op
+    with pytest.raises(FileNotFoundError):
+        tx_erase(spark, store + "_missing", unknown, key="o_orderkey")
 
 
 def test_tx_compact_single_swap(spark, store):
@@ -227,35 +247,57 @@ def test_null_partition_value_round_trip(spark, tmp_path):
     assert null_slice.count() == 1
 
 
-def test_tx_rollup_refresh_matches_plain_and_survives_crash(spark, sf_dir, tmp_path):
-    """tx_refresh_daily_rollup: bootstrap + incremental merge produce the
-    same rollup as the plain-directory refresh, a crash mid-refresh
-    leaves the previous rollup fully visible, and untouched days keep
-    their generation."""
+def test_tx_rollup_refresh_matches_full_recompute_and_survives_crash(
+    spark, sf_dir, tmp_path
+):
+    """tx_refresh_daily_rollup: bootstrap + incremental merge equal the
+    from-scratch rollup of both batches, days the second batch does not
+    touch keep their generation, every generation stores the one
+    decimal(38,6) sum type, an empty batch publishes nothing, and a crash
+    mid-refresh leaves the previous rollup fully visible."""
     from kinesis_spark.io import load_table, normalize_events_ts
-    from kinesis_spark.rollup import refresh_daily_rollup, tx_refresh_daily_rollup
+    from kinesis_spark.rollup import daily_rollup_state, tx_refresh_daily_rollup
 
     events = normalize_events_ts(load_table(spark, sf_dir, "events"))
     days = sorted(
         r[0] for r in events.select(F.to_date("ts").alias("d")).distinct().collect()
     )
     split_day = days[len(days) // 2]
-    batch1 = events.filter(F.to_date("ts") <= F.lit(split_day))
-    batch2 = events.filter(F.to_date("ts") > F.lit(split_day))
+    # batch2 shares its days with batch1, so the second refresh merges
+    # into stored state; days up to split_day are batch1's alone
+    late = F.to_date("ts") > F.lit(split_day)
+    batch1 = events.filter(~late | (F.col("event_id") % 2 == 0))
+    batch2 = events.filter(late & (F.col("event_id") % 2 == 1))
 
-    plain_dir = str(tmp_path / "plain")
+    def days_of(df):
+        return {str(r[0]) for r in df.select(F.to_date("ts")).distinct().collect()}
+
+    days2 = days_of(batch2)
     tx_root = str(tmp_path / "tx")
-    assert refresh_daily_rollup(spark, plain_dir, batch1) == tx_refresh_daily_rollup(
-        spark, tx_root, batch1
-    )
-    assert refresh_daily_rollup(spark, plain_dir, batch2) == tx_refresh_daily_rollup(
-        spark, tx_root, batch2
-    )
-    plain = sorted(map(tuple, spark.read.parquet(plain_dir).collect()))
-    got = sorted(map(tuple, tx_read(spark, tx_root).collect()))
-    assert got == plain and len(got) > 0
+    assert tx_refresh_daily_rollup(spark, tx_root, batch1) == len(days_of(batch1))
+    assert tx_refresh_daily_rollup(spark, tx_root, batch2) == len(days2)
+    cols = ["day", "event_type", "n_events", "sum_value"]
+
+    def rows(df):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    want = rows(daily_rollup_state(batch1.unionByName(batch2)))
+    assert rows(tx_read(spark, tx_root)) == want and len(want) > 0
     # day partition type survives the manifest round trip
     assert dict(tx_read(spark, tx_root).dtypes)["day"] == "date"
+    # days batch2 did not touch keep the bootstrap generation; the
+    # merged days share the second refresh's
+    man = tx_current_manifest(spark, tx_root)
+    gen = {day: rels[0].split("/")[1] for day, rels in man["partitions"].items()}
+    boot = {g for day, g in gen.items() if day not in days2}
+    merged = {g for day, g in gen.items() if day in days2}
+    assert len(boot) == len(merged) == 1 and boot != merged
+    for g in boot | merged:
+        stored = dict(spark.read.parquet(f"{tx_root}/_data/{g}").dtypes)
+        assert stored["sum_value"] == "decimal(38,6)"
+    # an empty batch: nothing rewritten, no new version
+    assert tx_refresh_daily_rollup(spark, tx_root, events.filter(F.lit(False))) == 0
+    assert tx_current_manifest(spark, tx_root)["version"] == man["version"]
 
     # crash mid-refresh (publish never happens): old rollup untouched
     before = tx_current_manifest(spark, tx_root)
@@ -269,7 +311,7 @@ def test_tx_rollup_refresh_matches_plain_and_survives_crash(spark, sf_dir, tmp_p
             _fail_at="after-audit",
         )
     assert tx_current_manifest(spark, tx_root)["version"] == before["version"]
-    assert sorted(map(tuple, tx_read(spark, tx_root).collect())) == plain
+    assert rows(tx_read(spark, tx_root)) == want
 
 
 def test_time_travel_reads_prior_versions(spark, store):
@@ -530,7 +572,9 @@ def test_tx_erase_default_retention_contract(spark, store):
 def test_tx_upsert_multilevel(spark, ml_store):
     """VERDICT r5 task 2: tx_upsert on a (cell, tenant) LIST-partitioned
     store — merge per key, touched partition TUPLES rewritten, untouched
-    tuples keep their original generation."""
+    tuples keep their original generation. An empty batch publishes
+    nothing, and a NULL key is one key: upserted once, replaced, then
+    erased."""
     tgt = tx_read(spark, ml_store)
     n_before = tgt.count()
     updates = spark.createDataFrame(
@@ -555,6 +599,32 @@ def test_tx_upsert_multilevel(spark, ml_store):
     assert len(untouched_gens) == 1  # all still on the bootstrap generation
     for k in touched:
         assert man["partitions"][k][0].split("/")[1] not in untouched_gens
+
+    # an empty batch on a partitioned store: 0 rewritten, no new version
+    empty = spark.createDataFrame([], updates.schema)
+    assert tx_upsert(spark, ml_store, empty, key="id") == 0
+    assert tx_current_manifest(spark, ml_store)["version"] == man["version"]
+
+    # a NULL-key update REPLACES the NULL-key row, never duplicates it
+    def null_rows():
+        return [
+            r.payload
+            for r in tx_read(spark, ml_store).filter(F.col("id").isNull()).collect()
+        ]
+
+    for payload in ("NULL1", "NULL2"):
+        upd = spark.createDataFrame([(None, payload, 1, "t0")], updates.schema)
+        assert tx_upsert(spark, ml_store, upd, key="id") == 1
+    assert null_rows() == ["NULL2"]
+    assert tx_read(spark, ml_store).count() == n_before + 2
+    # ... and a NULL key in an erasure request erases that row
+    req = spark.createDataFrame([(None,)], "id long")
+    audit = tx_erase(spark, ml_store, req, key="id").collect()
+    assert [
+        (r.partition_value, r.n_rows_erased, r.n_keys_matched, r.partition_emptied)
+        for r in audit
+    ] == [(_json.dumps(["1", "t0"]), 1, 1, False)]
+    assert null_rows() == []
 
 
 def test_tx_erase_multilevel_with_retention(spark, ml_store):
