@@ -19,8 +19,10 @@ Two implementations, one semantics:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import Column, DataFrame
 
 
 def chunk_bytes(payload: bytes, chunk_size: int) -> list[bytes]:
@@ -32,6 +34,8 @@ def chunk_bytes(payload: bytes, chunk_size: int) -> list[bytes]:
 
 def chunk_column(data: Column, chunk_size: Column) -> Column:
     """Array-of-chunks expression over a binary/string column (codegen'd)."""
+    from pyspark.sql import functions as F
+
     n_chunks = F.ceil(F.length(data) / chunk_size).cast("int")
     idx = F.sequence(F.lit(0), n_chunks - F.lit(1))
     return F.when(
@@ -54,6 +58,8 @@ def chunk_df(
     """
     if chunk_size <= 0:
         raise ValueError(f"chunk_size must be positive, got {chunk_size}")
+    from pyspark.sql import functions as F
+
     chunks = chunk_column(F.col(data_col).cast("binary"), F.lit(chunk_size))
     return df.select(
         "*", F.posexplode(chunks).alias(index_col, out_col)

@@ -109,8 +109,8 @@ class IntakeConfig:
 
     @property
     def checkpoint(self) -> str:
-        # per-consumer: B taking over must NOT replay against A's batch
-        # markers (start_prep_intake scopes markers to the checkpoint)
+        # per-consumer: B taking over is its own run, so A's committed
+        # batches never swallow B's (run tokens: streaming/batches.py)
         return self._p(self.checkpoint_dir, f"ckpt-{self.consumer_id}")
 
 

@@ -11,11 +11,3 @@ The reference pipeline maps onto a streaming query:
   — SURVEY.md §4 quirk 4)
 - graceful shutdown      → ``query.stop()`` / ``trigger(availableNow=True)``
 """
-
-from kinesis_spark.streaming.ingest import (
-    IngestMetrics,
-    build_rate_source,
-    start_ingest_query,
-)
-
-__all__ = ["IngestMetrics", "build_rate_source", "start_ingest_query"]

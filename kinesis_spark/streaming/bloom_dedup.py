@@ -40,9 +40,8 @@ Exactly-once protocol (foreachBatch replays a batch after failure):
    the bitmap itself is conservative: a crash that leaves it "ahead"
    only routes rows through the exact verify, never drops them; a crash
    that loses it triggers a rebuild from the hash store.
-4. The committed-batch marker is scoped to the run token (derived from
-   the checkpoint location) — a NEW query restarting batch numbering at
-   0 is new data to process, not a replay to skip.
+4. The batch is marked committed last; a redelivered committed batch is
+   skipped, and a NEW query's batch 0 is new data (streaming/batches.py).
 
 The per-batch subdirectories surface as an ``ingest_batch`` string
 column when reading ``out_dir`` — admission provenance for free (the
@@ -66,24 +65,7 @@ from kinesis_spark.bloom import (
     probe_bloom_dense,
 )
 from kinesis_spark.pins import pin, scope
-
-_MARKER = "_last_batch"
-
-
-def _read_marker(state_dir: str) -> tuple[str, int]:
-    try:
-        with open(os.path.join(state_dir, _MARKER)) as f:
-            token, _, bid = f.read().strip().rpartition(":")
-            return token, int(bid)
-    except (OSError, ValueError):
-        return "", -1
-
-
-def _write_marker(state_dir: str, token: str, batch_id: int) -> None:
-    tmp = os.path.join(state_dir, f".{_MARKER}.tmp")
-    with open(tmp, "w") as f:
-        f.write(f"{token}:{batch_id}")
-    os.replace(tmp, os.path.join(state_dir, _MARKER))
+from kinesis_spark.streaming import batches
 
 
 class BloomDedupSink:
@@ -112,15 +94,7 @@ class BloomDedupSink:
         self.id_col = id_col
         self.m_bits = m_bits
         self.k = k
-        # token identity: explicit > a sidecar file inside the
-        # checkpoint dir seeded from the query's metadata id (stable
-        # across restarts AND replay attempts of the same checkpoint,
-        # FRESH when the checkpoint is recreated — a path hash would
-        # wrongly survive rm -rf) > a per-instance nonce
-        self._fixed_token = run_token
-        self._checkpoint_dir = checkpoint_dir
-        self._resolved_token: str | None = None
-        os.makedirs(state_dir, exist_ok=True)
+        self.run_token = run_token or batches.run_token(checkpoint_dir)
 
     # -- state ------------------------------------------------------------
     @property
@@ -130,58 +104,6 @@ class BloomDedupSink:
     @property
     def _hash_dir(self) -> str:
         return os.path.join(self.state_dir, "hashes")
-
-    @property
-    def run_token(self) -> str:
-        if self._resolved_token is not None:
-            return self._resolved_token
-        if self._fixed_token is not None:
-            self._resolved_token = self._fixed_token
-        elif self._checkpoint_dir is not None:
-            self._resolved_token = self._checkpoint_token()
-        else:
-            import uuid
-
-            self._resolved_token = uuid.uuid4().hex[:12]
-        return self._resolved_token
-
-    def _checkpoint_token(self) -> str:
-        """A token with exactly the checkpoint's lifecycle, stable across
-        every attempt and restart of the same checkpoint. A sidecar file
-        INSIDE the checkpoint dir is the source of truth (created once,
-        O_EXCL, from the query id when the metadata is readable or a
-        nonce when the bootstrap races it); `rm -rf checkpoint` removes
-        it, so a recreated checkpoint gets a fresh token. Resolving the
-        metadata id directly on a later attempt would be WRONG: an
-        attempt that crashed mid-write under a bootstrap nonce must be
-        recognized by its replay, which requires the replay to read the
-        SAME token, not a newly-readable query id."""
-        import json
-        import uuid
-
-        side = os.path.join(self._checkpoint_dir, ".kinesis_spark_run_token")
-        try:
-            with open(side) as f:
-                return f.read().strip()
-        except OSError:
-            pass
-        try:
-            with open(os.path.join(self._checkpoint_dir, "metadata")) as f:
-                token = json.load(f)["id"][:12]
-        except (OSError, ValueError, KeyError):
-            token = f"boot-{uuid.uuid4().hex[:12]}"
-        os.makedirs(self._checkpoint_dir, exist_ok=True)
-        try:
-            fd = os.open(side, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        except FileExistsError:
-            with open(side) as f:  # lost the create race: theirs wins
-                return f.read().strip()
-        with os.fdopen(fd, "w") as f:
-            f.write(token)
-        return token
-
-    def _batch_key(self, token: str, batch_id: int) -> str:
-        return f"{token}-{batch_id}"
 
     def _load_hashes(self) -> DataFrame | None:
         if not os.path.isdir(self._hash_dir):
@@ -201,18 +123,10 @@ class BloomDedupSink:
     # -- the batch hook ---------------------------------------------------
     @scope()
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # resolve the token ONCE per batch: when the checkpoint metadata
-        # is briefly unreadable the boot fallback mints a fresh nonce per
-        # read, and the marker check, the batch subdirectory key, and the
-        # own-hash exclusion filter must all agree within one batch — a
-        # replay that keys its subdir under a different token than its
-        # first attempt would see its own partial hashes as "already
-        # admitted" and silently drop the replayed rows
         token = self.run_token
-        m_token, m_id = _read_marker(self.state_dir)
-        if m_token == token and batch_id <= m_id:
-            return  # replay of a committed batch from THIS run: no-op
-        key = self._batch_key(token, batch_id)
+        if batches.skip_if_committed(batch, self.state_dir, token, batch_id):
+            return
+        key = f"{token}-{batch_id}"
         hashed = batch.withColumn("h", F.sha2(self.text_col, 256))
         # within-batch winner per hash: smallest id (the d1 discipline)
         w = Window.partitionBy("h").orderBy(self.id_col)
@@ -259,7 +173,7 @@ class BloomDedupSink:
             # clear any partial first attempt, then commit the no-op
             shutil.rmtree(out_sub, ignore_errors=True)
             shutil.rmtree(hash_sub, ignore_errors=True)
-            _write_marker(self.state_dir, token, batch_id)
+            batches.mark_committed(self.state_dir, token, batch_id)
             return
 
         # per-batch OVERWRITE: a replay rewrites, never duplicates
@@ -284,7 +198,7 @@ class BloomDedupSink:
             os.replace(self._bloom_dir, old)
         os.replace(tmp, self._bloom_dir)
         shutil.rmtree(old, ignore_errors=True)
-        _write_marker(self.state_dir, token, batch_id)
+        batches.mark_committed(self.state_dir, token, batch_id)
 
 
 def start_bloom_dedup(
@@ -300,12 +214,9 @@ def start_bloom_dedup(
     k: int = DEFAULT_K,
     trigger_available_now: bool = False,
 ):
-    """Wire :class:`BloomDedupSink` into a streaming query. Returns the
-    started ``StreamingQuery``. The run token shares the checkpoint's
-    lifecycle (a sidecar file seeded from the query id): the same
-    checkpoint resumes the same batch numbering (marker applies); a NEW
-    or recreated checkpoint gets a new token, so its batch 0 is new
-    data to process, not a replay to skip."""
+    """Wire :class:`BloomDedupSink` into a streaming query; returns the
+    started ``StreamingQuery``. The run token is the checkpoint's
+    (streaming/batches.py)."""
     sink = BloomDedupSink(
         spark,
         state_dir,
@@ -316,11 +227,7 @@ def start_bloom_dedup(
         k=k,
         checkpoint_dir=checkpoint_dir,
     )
-    writer = (
-        docs_stream.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return batches.start_foreach_batch(
+        docs_stream, sink.process_batch, checkpoint_dir,
+        available_now=trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -22,18 +22,15 @@ State layout (single-writer per ``state_dir``, any number of readers):
 - ``<out_dir>/ingest_batch=<token>-<id>/`` — per-document rewrite
   reports, admission provenance for free via the partition column.
 
-Exactly-once (foreachBatch replays a batch after failure) — the
-bloom_dedup protocol verbatim:
+Exactly-once (foreachBatch replays a batch after failure): a committed
+batch is skipped by the run-token marker (streaming/batches.py); a batch
+that died half-written is redone safely, because
 
-1. Both writes are per-batch OVERWRITE subdirectories keyed by
-   (run token, batch id) — a replay rewrites, never duplicates.
-2. The store handed to the rewrite EXCLUDES the batch's OWN
-   subdirectory, so a replay whose first attempt died mid-write
-   recomputes the identical report (its own partial hashes can't turn
-   its chunks into "corpus-owned" dups).
-3. The committed-batch marker is scoped to the run token (sidecar in
-   the checkpoint dir), so a recreated checkpoint restarting batch
-   numbering is new data, not a replay to skip.
+1. both writes are per-batch OVERWRITE subdirectories keyed by
+   (run token, batch id) — a replay rewrites, never duplicates;
+2. the store handed to the rewrite EXCLUDES the batch's OWN
+   subdirectory, so the redo recomputes the identical report (its own
+   partial hashes can't turn its chunks into "corpus-owned" dups).
 
 Per-batch cost: the batch scan (pinned once for the three consumers
 inside the rewrite), one 16 B/row hash shuffle, one single-column
@@ -50,19 +47,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_spark.pins import scope
-from kinesis_spark.streaming.bloom_dedup import (
-    BloomDedupSink,
-    _read_marker,
-    _write_marker,
-)
+from kinesis_spark.streaming import batches
 
 
-class ChunkDedupSink(BloomDedupSink):
+class ChunkDedupSink:
     """foreachBatch sink: rewrite each batch's documents dropping
     corpus-owned / within-batch-repeated chunks, then append the
-    surviving chunk hashes to the durable store. Inherits the run-token
-    / marker / batch-key machinery (the exactly-once identity) from
-    :class:`BloomDedupSink`; the bloom-specific knobs are unused."""
+    surviving chunk hashes to the durable store."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        state_dir: str,
+        out_dir: str,
+        *,
+        run_token: str | None = None,
+        checkpoint_dir: str | None = None,
+    ) -> None:
+        self.spark = spark
+        self.state_dir = state_dir
+        self.out_dir = out_dir
+        self.run_token = run_token or batches.run_token(checkpoint_dir)
 
     @property
     def _chunk_dir(self) -> str:
@@ -78,16 +83,15 @@ class ChunkDedupSink(BloomDedupSink):
         from kinesis_spark.prep_index import chunk_dedup_rewrite, new_keys
         from kinesis_spark.queries.textstats import chunk_relation
 
-        token = self.run_token  # resolve ONCE per batch (see bloom sink)
-        m_token, m_id = _read_marker(self.state_dir)
-        if m_token == token and batch_id <= m_id:
-            return  # replay of a committed batch from THIS run: no-op
-        key = self._batch_key(token, batch_id)
+        token = self.run_token
+        if batches.skip_if_committed(batch, self.state_dir, token, batch_id):
+            return
+        key = f"{token}-{batch_id}"
         store = self._load_chunks()
         if store is None:
             store = self.spark.createDataFrame([], "chunk_hash string")
         else:
-            # exclude this batch's OWN subdirectory (replay rule 2)
+            # exclude this batch's OWN subdirectory (redo rule 2)
             store = store.filter(F.col("ingest_batch") != key).select(
                 "chunk_hash"
             )
@@ -105,7 +109,7 @@ class ChunkDedupSink(BloomDedupSink):
         fresh = new_keys(batch_keys, store, "chunk_hash")
         chunk_sub = os.path.join(self._chunk_dir, f"ingest_batch={key}")
         fresh.write.mode("overwrite").parquet(chunk_sub)
-        _write_marker(self.state_dir, token, batch_id)
+        batches.mark_committed(self.state_dir, token, batch_id)
 
 
 def start_chunk_dedup(
@@ -118,16 +122,12 @@ def start_chunk_dedup(
     trigger_available_now: bool = False,
 ):
     """Wire :class:`ChunkDedupSink` into a streaming query; returns the
-    started ``StreamingQuery``. Token/checkpoint lifecycle identical to
-    :func:`start_bloom_dedup`."""
+    started ``StreamingQuery``. The run token is the checkpoint's
+    (streaming/batches.py)."""
     sink = ChunkDedupSink(
         spark, state_dir, out_dir, checkpoint_dir=checkpoint_dir
     )
-    writer = (
-        docs_stream.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return batches.start_foreach_batch(
+        docs_stream, sink.process_batch, checkpoint_dir,
+        available_now=trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kinesis_spark.queries.lineage import PSI_BINS, psi_bin, psi_score
+from kinesis_spark.streaming.batches import start_foreach_batch
 
 # fold per-batch slots into the compacted roll-up once this many recent
 # slots have accumulated: small enough that a trigger never scans more
@@ -250,11 +251,6 @@ def start_psi_drift_query(
         if len([i for i in _slot_ids(spark, batches_dir) if i > upto]) >= COMPACT_EVERY:
             _compact_batches(spark, state_dir, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        stream, _sink, checkpoint_dir, available_now=trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -55,9 +55,9 @@ atomically together) uses bloom_dedup.py's staged-batch discipline:
 - The rollup applies an O(batch) DELTA on the fresh path and an
   idempotent RECOUNT of the touched partitions on the redo path (a
   delta can't know whether the crashed attempt already applied it).
-- A ``_done`` marker written LAST makes full replays of completed
-  batches (failover re-delivery) a metadata no-op; the staging
-  snapshot is deleted after it.
+- The batch is marked committed LAST (streaming/batches.py), so a
+  redelivered completed batch is skipped; the staging snapshot is
+  deleted after the mark.
 
 Identity contract: ``id_col`` is unique across the stream (the
 producer's contract — two DIFFERENT documents must not share an id).
@@ -83,14 +83,16 @@ only on crash-redo."""
 
 from __future__ import annotations
 
-import hashlib
 import os
+import shutil
 import urllib.parse
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_spark.queries import WS_RE
+from kinesis_spark.streaming import batches
 from kinesis_spark.txstore import (
     tx_append,
     tx_current_manifest,
@@ -98,8 +100,6 @@ from kinesis_spark.txstore import (
     tx_read,
     tx_upsert,
 )
-
-WS = r"[ \t\n\f\r\x0B]+"
 
 
 def is_missing_store(exc: AnalysisException) -> bool:
@@ -114,9 +114,8 @@ class PrepIntakeSink:
     ``build_prep_index`` or let the sink grow them from empty);
     ``store_root`` / ``rollup_root`` are transactional stores created on
     first use, partitioned by ``partition_cols``. ``run_token`` scopes
-    batch numbering to one streaming query (``start_prep_intake``
-    derives it from the checkpoint location, so restarts of the same
-    checkpoint share markers while a NEW query's batch 0 is new work)."""
+    batch numbering to one streaming query (``start_prep_intake`` sets
+    the checkpoint's run token, streaming/batches.py)."""
 
     def __init__(
         self,
@@ -134,7 +133,7 @@ class PrepIntakeSink:
         self.spark = spark
         self.hashes_dir = hashes_dir
         self.bands_dir = bands_dir
-        # The staged/done markers and the staging snapshot use local
+        # The staged/committed markers and the staging snapshot use local
         # os.path/open/shutil I/O; a non-local store_root (hdfs://, s3a://)
         # would silently write markers to a misleading local path and void
         # the crash-redo protocol. Fail fast until marker I/O is routed
@@ -249,7 +248,7 @@ class PrepIntakeSink:
             docs.groupBy(*pcols)
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum(F.size(F.split(self.text_col, WS)))
+                F.sum(F.size(F.split(self.text_col, WS_RE)))
                 .cast("bigint")
                 .alias("total_tokens"),
             )
@@ -307,8 +306,9 @@ class PrepIntakeSink:
     # -- the sink --------------------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker("done", batch_id)):
-            return  # full replay of a completed batch: metadata no-op
+        state, token = self._intake_dir(), self.run_token
+        if batches.skip_if_committed(batch, state, token, batch_id):
+            return
 
         stage = self._stage_dir(batch_id)
         staged_marker = self._marker("staged", batch_id)
@@ -388,10 +388,7 @@ class PrepIntakeSink:
                 else:
                     self._rollup_delta(docs)
 
-        with open(self._marker("done", batch_id), "w") as f:
-            f.write(str(batch_id))
-        import shutil
-
+        batches.mark_committed(state, token, batch_id)
         shutil.rmtree(stage, ignore_errors=True)
         try:
             os.unlink(staged_marker)
@@ -408,18 +405,10 @@ def start_prep_intake(
     """Wire the sink into a streaming query. The caller owns the
     upstream gate (language/length/quality filters are stream-safe
     projections) and any replay-shield ``dropDuplicates`` it wants in
-    front. Scopes the sink's batch markers to this checkpoint, so a
-    restart of the SAME checkpoint replays against its own markers
-    while a fresh query starts a fresh marker space. Returns the
-    started StreamingQuery."""
-    sink.run_token = hashlib.md5(
-        os.path.realpath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
-    writer = (
-        docs_stream.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    front. Sets the sink's run token to the checkpoint's
+    (streaming/batches.py). Returns the started StreamingQuery."""
+    sink.run_token = batches.run_token(checkpoint_dir)
+    return batches.start_foreach_batch(
+        docs_stream, sink.process_batch, checkpoint_dir,
+        available_now=trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

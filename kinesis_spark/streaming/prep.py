@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kinesis_spark.queries import WS_RE
 from kinesis_spark.queries.pipelines import _KEEP_LANGS, _MIN_TOKENS
 from kinesis_spark.streaming.neardup import streaming_near_dup_candidates
 
@@ -31,7 +32,7 @@ def gate(docs: DataFrame) -> DataFrame:
     filter)."""
     return docs.filter(
         F.col("lang").isin(*_KEEP_LANGS)
-        & (F.size(F.split("text", r"[ \t\n\f\r\x0B]+")) >= _MIN_TOKENS)
+        & (F.size(F.split("text", WS_RE)) >= _MIN_TOKENS)
     )
 
 

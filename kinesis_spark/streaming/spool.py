@@ -32,9 +32,10 @@ import json
 import os
 import time
 import uuid
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 
 class SpoolStreamClient:
@@ -90,6 +91,8 @@ def reassemble_records(records: DataFrame) -> DataFrame:
     happens inside each group via ``array_sort`` on (seq, data) structs,
     not a global sort.
     """
+    from pyspark.sql import functions as F
+
     return (
         records.groupBy("pk")
         .agg(

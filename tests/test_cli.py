@@ -88,6 +88,26 @@ def test_cli_subprocess_end_to_end(tmp_path):
     assert sum(e["n"] for e in entries) == len(data)
 
 
+def test_writer_paths_import_without_pyspark():
+    """The writer CLI, the ingest chain and the spool client are pure
+    Python: importing them loads no pyspark (a cold CLI start would
+    otherwise spend most of its time importing Spark's Python layer)."""
+    code = (
+        "import sys, kinesis_spark.__main__, kinesis_spark.ingest, "
+        "kinesis_spark.ingest.pipeline, kinesis_spark.streaming.spool; "
+        "print(sorted(m for m in sys.modules if m.startswith('pyspark')))"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip() == "[]"
+
+
 def test_cli_requires_partition_key():
     import pytest
 

@@ -191,7 +191,8 @@ def test_completed_batch_replay_is_a_noop(spark, sf_dir, tmp_path):
     sink.process_batch(b1, 0)
     state = _end_state(spark, sink)
     assert not os.path.exists(sink._stage_dir(0))  # staging cleaned up
-    assert os.path.exists(sink._marker("done", 0))
+    with open(os.path.join(sink._intake_dir(), "_last_batch")) as f:
+        assert f.read() == f"{sink.run_token}:0"
     sink.process_batch(b1, 0)
     assert _end_state(spark, sink) == state
 

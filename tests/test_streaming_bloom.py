@@ -294,3 +294,41 @@ def test_bloom_dedup_recreated_checkpoint_is_new_run(spark, chunked_docs, tmp_pa
         rest, 0
     )
     assert spark.read.parquet(out).count() > n1
+
+
+@pytest.mark.streaming
+def test_bloom_dedup_rerun_of_committed_batch_behind_dropduplicates(
+    spark, chunked_docs, tmp_path
+):
+    """A restart that re-runs a batch the sink already committed (its
+    entry in the checkpoint's commit log lost) must still consume the
+    batch: the upstream dropDuplicates commits its state-store version
+    only when the batch's plan runs. The second drain completes and
+    admits nothing new."""
+    import glob
+    import os
+
+    state = str(tmp_path / "state")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        q = start_bloom_dedup(
+            spark,
+            _stream(spark, chunked_docs).dropDuplicates(["doc_id"]),
+            state,
+            out,
+            ckpt,
+            trigger_available_now=True,
+        )
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+
+    drain()
+    n1 = spark.read.parquet(out).count()
+    last = max(int(os.path.basename(p)) for p in glob.glob(f"{ckpt}/commits/[0-9]*"))
+    os.remove(f"{ckpt}/commits/{last}")
+    os.remove(f"{ckpt}/commits/.{last}.crc")
+    drain()
+    assert sorted(int(os.path.basename(p)) for p in glob.glob(f"{ckpt}/commits/[0-9]*"))[-1] == last
+    assert spark.read.parquet(out).count() == n1
